@@ -37,4 +37,7 @@ class CommitConflictError(DataCatalogError):
     """Raised when a catalog commit loses an optimistic-concurrency race:
     the table advanced past the version the post-image was computed
     against.  The loser must retry on the new snapshot — never silently
-    clobber the winner's manifest chain (HTTP 409 shape)."""
+    clobber the winner's manifest chain.  Single-entry writes retry a few
+    times themselves; one that still loses surfaces as HTTP 409."""
+
+    code = 409

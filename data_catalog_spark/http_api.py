@@ -116,6 +116,7 @@ def _swagger_doc() -> dict:
         "401": {"description": "Missing or invalid token."},
         "403": {"description": "Access forbidden for this org scope."},
         "404": {"description": "No data set with this id."},
+        "409": {"description": "Lost a concurrent write; retry."},
         "500": {"description": "Internal error."},
     }
     return {
@@ -187,7 +188,7 @@ def _swagger_doc() -> dict:
                     "responses": {
                         "200": {"description": "Entry updated."},
                         "201": {"description": "Entry created."},
-                        **{k: err[k] for k in ("400", "401", "403", "500")},
+                        **{k: err[k] for k in ("400", "401", "403", "409", "500")},
                     },
                 },
                 "post": {
@@ -204,7 +205,7 @@ def _swagger_doc() -> dict:
                     ],
                     "responses": {
                         "200": {"description": "Entry partially updated."},
-                        **{k: err[k] for k in ("400", "401", "403", "404", "500")},
+                        **{k: err[k] for k in ("400", "401", "403", "404", "409", "500")},
                     },
                 },
                 "delete": {
@@ -215,7 +216,7 @@ def _swagger_doc() -> dict:
                             "description": "Entry deleted (with cascade report).",
                             "schema": {"$ref": "#/definitions/DeleteResponse"},
                         },
-                        **{k: err[k] for k in ("401", "403", "404", "500")},
+                        **{k: err[k] for k in ("401", "403", "404", "409", "500")},
                     },
                 },
             },

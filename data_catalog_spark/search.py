@@ -84,25 +84,33 @@ def text_clause_columns(text: str) -> list[tuple[Column, float]]:
     return clauses
 
 
-def score_column(cq: CompiledQuery) -> Column:
-    """T4/T5: sum of matching clause boosts; constant 1.0 on match-all."""
+def _clauses(cq: CompiledQuery, clauses=None) -> list[tuple[Column, float]]:
+    if clauses is not None:
+        return clauses
+    return text_clause_columns(cq.text) if cq.text else []
+
+
+def score_column(cq: CompiledQuery, clauses=None) -> Column:
+    """T4/T5: sum of matching clause boosts; constant 1.0 on match-all.
+    ``clauses``: ``text_clause_columns(cq.text)`` when already built."""
     if not cq.text:
-        return F.lit(1.0).cast("double")
+        return F.lit(1.0)
     total = None
-    for pred, boost in text_clause_columns(cq.text):
-        c = F.when(pred, F.lit(boost).cast("double")).otherwise(F.lit(0.0).cast("double"))
+    for pred, boost in _clauses(cq, clauses):
+        c = F.when(pred, F.lit(boost)).otherwise(F.lit(0.0))
         total = c if total is None else (total + c)
     return total
 
 
-def query_predicate(cq: CompiledQuery) -> Column:
-    """Security + query filters + text-match requirement (≥1 should-clause)."""
+def query_predicate(cq: CompiledQuery, clauses=None) -> Column:
+    """Security + query filters + text-match requirement (≥1 should-clause).
+    ``clauses``: ``text_clause_columns(cq.text)`` when already built."""
     cond = F.lit(True)
     for f in cq.query_filters:
         cond = cond & predicate_column(f)
     if cq.text:
         disj = None
-        for pred, _ in text_clause_columns(cq.text):
+        for pred, _ in _clauses(cq, clauses):
             disj = pred if disj is None else (disj | pred)
         cond = cond & disj
     return cond
@@ -115,21 +123,31 @@ def post_predicate(cq: CompiledQuery) -> Column:
     return cond
 
 
-def query_filtered(df: DataFrame, cq: CompiledQuery) -> DataFrame:
+def query_filtered(df: DataFrame, cq: CompiledQuery, clauses=None) -> DataFrame:
     """df1 of the R2 plan shape: query-context rows (facet/aggregation base)."""
-    return df.where(query_predicate(cq))
+    return df.where(query_predicate(cq, clauses))
 
 
-def hits(df: DataFrame, cq: CompiledQuery) -> DataFrame:
+def hits(
+    df: DataFrame, cq: CompiledQuery, *, clauses=None, filtered=None
+) -> DataFrame:
     """Ranked, post-filtered, paginated hits page — compiles to
     TakeOrderedAndProject (top-k, no global sort).  A compiled
     ``searchAfter`` cursor routes to the O(page) cursor plan instead of
-    offset paging."""
+    offset paging.
+
+    ``clauses`` / ``filtered``: the text clauses and ``query_filtered``
+    frame of (df, cq) when the caller already built them — ``search``
+    shares one Column tree between the hits page and the facets."""
     if cq.search_after is not None:
-        return hits_after(df, cq, *cq.search_after)
+        return hits_after(
+            df, cq, *cq.search_after, clauses=clauses, filtered=filtered
+        )
+    clauses = _clauses(cq, clauses)
+    if filtered is None:
+        filtered = query_filtered(df, cq, clauses)
     ranked = (
-        query_filtered(df, cq)
-        .withColumn("score", score_column(cq))
+        filtered.withColumn("score", score_column(cq, clauses))
         .where(post_predicate(cq))
         .select(*COLUMN_ORDER, "score")
         .orderBy(F.col("score").desc(), F.col("id").asc())
@@ -140,7 +158,13 @@ def hits(df: DataFrame, cq: CompiledQuery) -> DataFrame:
 
 
 def hits_after(
-    df: DataFrame, cq: CompiledQuery, after_score: float, after_id: str
+    df: DataFrame,
+    cq: CompiledQuery,
+    after_score: float,
+    after_id: str,
+    *,
+    clauses=None,
+    filtered=None,
 ) -> DataFrame:
     """Cursor-paged hits (ES ``search_after``): the page strictly AFTER
     the (score, id) cursor in ranking order.  ``from``/``size`` deep
@@ -151,10 +175,13 @@ def hits_after(
     TakeOrderedAndProject(size) over the already-pruned set.  The cursor
     is (score, id) — exactly the ranking's sort key, so consecutive
     cursor pages tile the from/size ranking with no gaps or repeats
-    (pinned by test_search_after_tiles_offset_pages)."""
+    (pinned by test_search_after_tiles_offset_pages).  ``clauses`` /
+    ``filtered`` as in ``hits``."""
+    clauses = _clauses(cq, clauses)
+    if filtered is None:
+        filtered = query_filtered(df, cq, clauses)
     return (
-        query_filtered(df, cq)
-        .withColumn("score", score_column(cq))
+        filtered.withColumn("score", score_column(cq, clauses))
         .where(post_predicate(cq))
         .where(
             (F.col("score") < after_score)
@@ -246,16 +273,21 @@ def total(df: DataFrame, cq: CompiledQuery) -> DataFrame:
     )
 
 
-def facets_and_total(df: DataFrame, cq: CompiledQuery) -> tuple[list[str], list[str], int]:
+def facets_and_total(
+    df: DataFrame, cq: CompiledQuery, *, filtered=None
+) -> tuple[list[str], list[str], int]:
     """R2 one-pass plan: GROUPING SETS ((category), (format), ()) over the
     query-filtered set computes BOTH facets (pre-post-filter counts, A1/A2)
     and the post-filtered total (A3, as a conditional sum in the () slot)
     in a single scan + single aggregation — versus three separate jobs.
     Output rows are bounded by |categories| + |formats| + 1, so the final
-    top-k ordering happens on the driver."""
+    top-k ordering happens on the driver.  An empty query-filtered set
+    yields no rows at all (not even the () slot): total 0, no facets.
+    ``filtered``: ``query_filtered(df, cq)`` when already built."""
+    if filtered is None:
+        filtered = query_filtered(df, cq)
     rows = (
-        query_filtered(df, cq)
-        .withColumn("_post", F.when(post_predicate(cq), 1).otherwise(0))
+        filtered.withColumn("_post", F.when(post_predicate(cq), 1).otherwise(0))
         .groupingSets([["category"], ["format"], []], "category", "format")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
@@ -274,7 +306,9 @@ def facets_and_total(df: DataFrame, cq: CompiledQuery) -> tuple[list[str], list[
 
     cats = topk("category", CATEGORIES_FACET_SIZE, 0, 1)
     fmts = topk("format", FORMATS_FACET_SIZE, 1, 0)
-    total_n = next(int(r["post_cnt"]) for r in rows if r["gc"] == 1 and r["gf"] == 1)
+    total_n = next(
+        (int(r["post_cnt"]) for r in rows if r["gc"] == 1 and r["gf"] == 1), 0
+    )
     return cats, fmts, total_n
 
 
@@ -292,9 +326,14 @@ class SearchResult:
 def search(df: DataFrame, cq: CompiledQuery) -> SearchResult:
     """Full faceted search — the one driver-side collect point (final page +
     facet keys + count only; never the full match set).  Two jobs total:
-    the ranked hits page, and the one-pass facets+total aggregation."""
-    hit_rows = [r.asDict() for r in hits(df, cq).collect()]
-    cats, fmts, n = facets_and_total(df, cq)
+    the ranked hits page, and the one-pass facets+total aggregation, both
+    over one shared query-filtered frame (its Column tree is built once)."""
+    clauses = _clauses(cq)
+    filtered = query_filtered(df, cq, clauses)
+    hit_rows = [
+        r.asDict() for r in hits(df, cq, clauses=clauses, filtered=filtered).collect()
+    ]
+    cats, fmts, n = facets_and_total(df, cq, filtered=filtered)
     return SearchResult(hits=hit_rows, total=n, categories=cats, formats=fmts)
 
 

@@ -586,3 +586,271 @@ def test_lock_timeout_does_not_leak_tmp_snapshot(spark, tmp_path):
     # snapshots/ holds only the committed version dirs — no tmp residue
     snaps = os.listdir(os.path.join(path, "snapshots"))
     assert all(s.startswith("v") for s in snaps), snaps
+
+
+# -- serving snapshot: reads of the latest version come from one pin -------
+
+
+def _ids(cat) -> set:
+    return {r.id for r in cat.df().collect()}
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_pinned_reads_see_every_write(spark, tmp_path):
+    """Read-your-writes through the pin after each kind of commit."""
+    cat = DatasetsCatalog(spark, str(tmp_path / "ryw"))
+    cat.upsert("a", ENTRY)
+    assert _ids(cat) == {"a"}
+    assert _ids(cat) == {"a"}  # the second read pins the version
+    assert cat.df() is cat.df()  # one frame per version: served from the pin
+    assert "InMemoryRelation" in cat.df()._jdf.queryExecution().optimizedPlan().toString()
+
+    cat.partial_update("a", {"title": "patched"})
+    assert cat.get("a")["title"] == "patched"
+
+    cat.bulk_upsert([("b", ENTRY), ("c", {**ENTRY, "isPublic": False})])
+    assert _ids(cat) == {"a", "b", "c"}
+
+    cat.delete("b")
+    assert _ids(cat) == {"a", "c"}
+    with pytest.raises(EntryNotFoundError):
+        cat.get("b")
+
+    batch = spark.createDataFrame(
+        [("d", "from a stream", "health", "s", "csv", 1, 1, "u",
+          ENTRY["targetUri"], True, "org03", "2015-02-13T13:00:00")],
+        "id string, title string, category string, dataSample string, "
+        "format string, recordCount bigint, size bigint, sourceUri string, "
+        "targetUri string, isPublic boolean, orgUUID string, creationTime string",
+    )
+    assert cat.bulk_upsert_df(batch) == (1, 0)
+    assert _ids(cat) == {"a", "c", "d"}
+    assert cat.count() == 3
+
+    before = {r.id: r.asDict() for r in cat.df().collect()}
+    rep = cat.compact(max_files_per_cell=0)
+    assert rep["version"] == cat._latest_version()
+    for _ in range(2):  # first read unpinned, second pinned
+        assert {r.id: r.asDict() for r in cat.df().collect()} == before
+    assert cat._pin.key[0] == rep["version"]
+
+
+def test_second_instance_sees_commit_on_next_read(spark, tmp_path):
+    path = str(tmp_path / "two")
+    a = DatasetsCatalog(spark, path)
+    b = DatasetsCatalog(spark, path)
+    a.upsert("x", ENTRY)
+    assert _ids(b) == {"x"} == _ids(b)  # the second read pins this version
+    assert b._pin.frame is not None
+    a.upsert("y", ENTRY)
+    assert _ids(b) == {"x", "y"} == _ids(b)
+    a.delete("x")
+    assert b.count() == 1 == b.count()
+
+
+def test_drop_and_recreate_to_same_version_serves_new_rows(spark, tmp_path):
+    """The slot key carries the manifest's inode and mtime, so a table
+    dropped and rebuilt back to the same version number is a new key — for
+    the dropping instance and for another one that still holds the pin."""
+    path = str(tmp_path / "recreate")
+    a = DatasetsCatalog(spark, path)
+    b = DatasetsCatalog(spark, path)
+    a.upsert("old", ENTRY)
+    v = a._latest_version()
+    for cat in (a, b):  # both instances pin the old table
+        assert _ids(cat) == {"old"} == _ids(cat)
+        assert cat._pin.frame is not None
+    a.drop()
+    assert a._pin.key is None  # drop empties the slot
+    a.upsert("new", {**ENTRY, "title": "rebuilt"})
+    assert a._latest_version() == v
+    for cat in (a, b):
+        assert _ids(cat) == {"new"} == _ids(cat)
+        assert cat.get("new")["title"] == "rebuilt"
+
+
+def test_time_travel_to_vacuumed_version_still_raises(spark, tmp_path):
+    cat = DatasetsCatalog(spark, str(tmp_path / "vac"))
+    cat.upsert("a", ENTRY)
+    cat.upsert("a", {**ENTRY, "title": "v2"})
+    cat.upsert("a", {**ENTRY, "title": "v3"})
+    assert cat.get("a")["title"] == "v3"
+    removed = cat.vacuum(keep_last=1)
+    assert removed
+    for v in removed:
+        with pytest.raises(EntryNotFoundError):
+            cat.df(version=v)
+    assert cat.get("a")["title"] == "v3"
+
+
+def test_pin_holds_at_most_two_versions(spark, tmp_path):
+    """Ten commits with reads in between pin at most two versions: the
+    current one and the one it superseded."""
+    import gc
+
+    gc.collect()  # run finalizers of catalogs other tests left behind
+    cat = DatasetsCatalog(spark, str(tmp_path / "bounded"))
+    cat.create_if_not_exists()
+    base = _persistent_rdds(spark)
+    for i in range(10):
+        cat.upsert(f"e{i}", ENTRY)
+        assert cat.count() == i + 1
+        assert cat.count() == i + 1  # the second read pins the version
+        assert cat._pin.key[0] == cat._latest_version()
+        assert _persistent_rdds(spark) - base <= 2
+    cat.drop()
+    assert _persistent_rdds(spark) <= base
+
+
+def test_concurrent_readers_never_go_back_a_version(spark, tmp_path):
+    """Readers sharing the slot while a writer commits: every reader's
+    counts only grow (a stale frame served after a newer one would
+    break that), nothing raises, and the last read sees every write."""
+    import sys
+    import threading
+
+    cat = DatasetsCatalog(spark, str(tmp_path / "stress"))
+    cat.upsert("e0", ENTRY)
+    stop = threading.Event()
+    seen: dict[int, list[int]] = {}
+    errors = []
+
+    def reader(k: int) -> None:
+        mine = seen.setdefault(k, [])
+        try:
+            while not stop.is_set():
+                mine.append(cat.count())
+        except Exception as ex:  # noqa: BLE001 — asserted below
+            errors.append(ex)
+
+    saved = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        readers = [threading.Thread(target=reader, args=(k,), daemon=True) for k in range(6)]
+        for t in readers:
+            t.start()
+        for i in range(1, 4):
+            cat.upsert(f"e{i}", ENTRY)
+        stop.set()
+        for t in readers:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(saved)
+    assert not any(t.is_alive() for t in readers)
+    assert errors == []
+    for counts in seen.values():
+        assert counts == sorted(counts) and set(counts) <= {1, 2, 3, 4}
+    assert cat.count() == 4
+
+
+def _pin_fixture(spark, path: str) -> None:
+    DatasetsCatalog(spark, path).bulk_upsert(
+        [
+            (f"e{i}", {**ENTRY, "title": f"a great title {i}", "isPublic": i % 3 == 0,
+                       "orgUUID": f"org0{i % 4}", "format": ["csv", "json"][i % 2]})
+            for i in range(12)
+        ]
+    )
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_first_read_of_a_version_is_unpinned(spark, tmp_path):
+    """A one-shot caller (write, then hand ``df()`` back) reads each
+    version once: it gets the union of scans, and nothing is persisted.
+    Only a second read of the same version pins it."""
+    path = str(tmp_path / "once")
+    _pin_fixture(spark, path)
+    cat = DatasetsCatalog(spark, path)
+    first = cat.df()
+    assert "InMemoryRelation" not in _plan(first) and "Union" in _plan(first)
+    assert cat._pin.frame is None
+    second = cat.df()
+    assert "InMemoryRelation" in _plan(second)
+    assert sorted(map(tuple, first.collect())) == sorted(map(tuple, second.collect()))
+
+
+def test_pin_is_size_checked(spark, tmp_path, monkeypatch):
+    """Above PIN_MAX_BYTES (-1: every table) every read is the unpinned
+    union of scans, with the same answers."""
+    from data_catalog_spark import search
+    from data_catalog_spark.query import DataSetFiltering, compile_query
+
+    path = str(tmp_path / "bound")
+    _pin_fixture(spark, path)
+    cq = compile_query({"query": "great", "size": 5}, ["org01"],
+                       DataSetFiltering.PRIVATE_AND_PUBLIC, False)
+
+    def answers(cat):
+        cat.df()  # the first read never pins
+        df = cat.df()
+        return _plan(df), sorted(map(tuple, df.collect())), search.search(df, cq)
+
+    plan, *want = answers(DatasetsCatalog(spark, path))
+    assert "InMemoryRelation" in plan
+    monkeypatch.setattr(DatasetsCatalog, "PIN_MAX_BYTES", -1)
+    unpinned = DatasetsCatalog(spark, path)
+    plan, *got = answers(unpinned)
+    assert "InMemoryRelation" not in plan and "Union" in plan
+    assert unpinned._pin.frame is None
+    assert got == want
+
+
+# -- single-entry writes retry a lost commit race -------------------------
+
+
+def _racing(loser: DatasetsCatalog, rival: DatasetsCatalog, losses: int):
+    """Make ``loser``'s next ``losses`` commits lose the race: the rival
+    commits between the loser's base read and its compare-and-swap."""
+    real = loser._commit
+    calls = []
+
+    def commit(*args, **kw):
+        calls.append(1)
+        if len(calls) <= losses:
+            rival.upsert(f"rival{len(calls)}", ENTRY)
+        return real(*args, **kw)
+
+    loser._commit = commit
+    return calls
+
+
+@pytest.mark.parametrize("op", ["upsert", "partial_update", "delete"])
+def test_lost_commit_race_retries_on_new_base(spark, tmp_path, op):
+    path = str(tmp_path / op)
+    a = DatasetsCatalog(spark, path)
+    b = DatasetsCatalog(spark, path)
+    a.upsert("mine", ENTRY)
+    calls = _racing(a, b, losses=1)
+    if op == "upsert":
+        assert a.upsert("new", ENTRY) is True
+        want = {"mine", "new", "rival1"}
+    elif op == "partial_update":
+        a.partial_update("mine", {"title": "patched"})
+        assert a.get("mine")["title"] == "patched"
+        want = {"mine", "rival1"}
+    else:
+        assert a.delete("mine")["id"] == "mine"
+        want = {"rival1"}
+    assert len(calls) == 2  # lost once, won on the re-read base
+    assert _ids(a) == want == _ids(b)
+
+
+def test_write_losing_every_attempt_raises_conflict(spark, tmp_path):
+    from data_catalog_spark.errors import CommitConflictError
+
+    path = str(tmp_path / "starved")
+    a = DatasetsCatalog(spark, path)
+    b = DatasetsCatalog(spark, path)
+    a.upsert("mine", ENTRY)
+    calls = _racing(a, b, losses=a.COMMIT_ATTEMPTS)
+    with pytest.raises(CommitConflictError) as err:
+        a.upsert("late", ENTRY)
+    assert err.value.code == 409
+    assert len(calls) == a.COMMIT_ATTEMPTS
+    assert "late" not in _ids(a)

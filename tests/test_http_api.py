@@ -5,6 +5,7 @@ status-code matrix over a live Spark-backed catalog."""
 from __future__ import annotations
 
 import base64
+import contextlib
 import hashlib
 import hmac
 import http.client
@@ -50,17 +51,25 @@ ENTRY = {
 }
 
 
-@pytest.fixture(scope="module")
-def server(spark, tmp_path_factory):
-    cat = DatasetsCatalog(spark, str(tmp_path_factory.mktemp("http") / "tbl"))
+@contextlib.contextmanager
+def _serving(cat):
     app = DataCatalogApp(
         DataCatalogService(cat), TokenVerifier(SECRET, "HS256")
     )
     srv = make_server(app)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
-    yield srv.server_address
-    srv.shutdown()
+    try:
+        yield srv.server_address
+    finally:
+        srv.shutdown()
+
+
+@pytest.fixture(scope="module")
+def server(spark, tmp_path_factory):
+    cat = DatasetsCatalog(spark, str(tmp_path_factory.mktemp("http") / "tbl"))
+    with _serving(cat) as addr:
+        yield addr
 
 
 def _req(addr, method, path, token=None, body=None):
@@ -339,3 +348,69 @@ def test_api_doc_is_full_swagger_contract(server):
     for p in ("/rest/datasets", "/rest/datasets/count"):
         names = {prm["name"] for prm in paths[p]["get"]["parameters"]}
         assert names == {"query", "orgs", "onlyPublic", "onlyPrivate"}
+
+
+def test_zero_hit_search_over_http_matches_oracle(spark, tmp_path):
+    """A search that matches nothing is HTTP 200 with the oracle's answer
+    (total 0), not a 500."""
+    from urllib.parse import quote
+
+    from data_catalog_spark.query import DataSetFiltering
+    from test_service import ZERO_HIT_QUERIES, oracle_search
+
+    cat = DatasetsCatalog(spark, str(tmp_path / "zero"))
+    cat.bulk_upsert(
+        [(f"z{i}", {**ENTRY, "title": f"widget {i}", "isPublic": i % 2 == 0})
+         for i in range(4)]
+    )
+    with _serving(cat) as addr:
+        for query in ZERO_HIT_QUERIES:
+            status, result = _req(
+                addr, "GET", f"/rest/datasets?query={quote(json.dumps(query))}",
+                token=ADMIN,
+            )
+            assert status == 200, result
+            want = oracle_search(
+                cat, query, [], DataSetFiltering.PRIVATE_AND_PUBLIC, True
+            )
+            assert want["total"] == 0
+            assert {**result, "hits": [h["id"] for h in result["hits"]]} == want
+
+
+def test_two_threads_put_to_one_table(spark, tmp_path):
+    """Concurrent writers race on the optimistic commit; the loser retries
+    on the new base, so every PUT gets its 201 and every row lands."""
+    cat = DatasetsCatalog(spark, str(tmp_path / "race"))
+    cat.create_if_not_exists()
+    statuses = []
+    with _serving(cat) as addr:
+
+        def writer(w: int) -> None:
+            for k in range(3):
+                statuses.append(_req(
+                    addr, "PUT", f"/rest/datasets/w{w}-{k}", token=ADMIN,
+                    body={**ENTRY, "title": f"writer {w} {k}"},
+                )[0])
+
+        threads = [threading.Thread(target=writer, args=(w,)) for w in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        status, n = _req(addr, "GET", "/rest/datasets/count", token=ADMIN)
+    assert statuses == [201] * 6
+    assert status == 200 and n == 6
+
+
+def test_lost_commit_race_renders_409(spark, tmp_path):
+    from data_catalog_spark.errors import CommitConflictError
+
+    cat = DatasetsCatalog(spark, str(tmp_path / "conflict"))
+
+    def lose(entry_id, entry):
+        raise CommitConflictError("table advanced during commit")
+
+    cat.upsert = lose
+    with _serving(cat) as addr:
+        status, err = _req(addr, "PUT", "/rest/datasets/x", token=ADMIN, body=ENTRY)
+    assert status == 409 and err["status"] == 409

@@ -129,3 +129,44 @@ def test_bulk_load_skips_non_dict_rows(svc):
 def test_non_string_query_maps_to_400(svc):
     assert svc.search(5, ORG)[1] == 400
     assert svc.search(["x"], ORG)[1] == 400
+
+
+def oracle_search(cat, query, orgs, mode, admin) -> dict:
+    """The DuckDB answer of ``query.sqlgen`` over the catalog's rows."""
+    import duckdb
+
+    from data_catalog_spark.query import compile_query, sqlgen
+
+    cq = compile_query(query, orgs, mode, admin)
+    con = duckdb.connect()
+    con.register("datasets", cat.df().toPandas())
+
+    def col(sql):
+        return [r[0] for r in con.execute(sql).fetchall()]
+
+    return {
+        "hits": col(sqlgen.hits_sql(cq)),
+        "total": col(sqlgen.total_sql(cq))[0],
+        "categories": col(sqlgen.categories_facet_sql(cq)),
+        "formats": col(sqlgen.formats_facet_sql(cq)),
+    }
+
+
+ZERO_HIT_QUERIES = [
+    {"query": "zzzunmatched"},  # nothing passes the query filter
+    {"filters": [{"format": ["nosuchformat"]}]},  # facets, but no post-filter hit
+]
+
+
+@pytest.mark.parametrize("query", ZERO_HIT_QUERIES)
+def test_zero_hit_search_is_200_and_matches_oracle(svc, query):
+    svc.catalog.bulk_upsert(
+        [(f"e{i}", {**ENTRY, "title": f"title {i}", "isPublic": i % 2 == 0})
+         for i in range(4)]
+    )
+    body, status = svc.search(query, ORG)
+    assert status == 200
+    got = {**body, "hits": [h["id"] for h in body["hits"]]}
+    want = oracle_search(svc.catalog, query, ORG, M.PRIVATE_AND_PUBLIC, False)
+    assert want["total"] == 0 and want["hits"] == []
+    assert got == want
