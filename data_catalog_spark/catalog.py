@@ -27,30 +27,28 @@ names its touched partitions; only ``_commit`` knows the storage).  The
 reference's explicit index flush for read-your-writes (bases.py:82, R8) is a
 no-op here: a committed snapshot is immediately visible to new reads.
 
-Serving snapshot: reads of the LATEST committed version that this instance
-reads a second time are answered from one persisted frame per version (the
+Serving snapshot: searches, GETs and counts of the LATEST committed version
+are answered from one driver-resident ``pyarrow.Table`` of that version (the
 reference answers every search, GET and count from Elasticsearch's
-in-memory index).  The frame is the version's union of cell scans,
-coalesced to one partition and persisted; the instance keeps it in a single
-lock-guarded slot keyed on (version, manifest inode, manifest mtime), so a
-drop-and-recreate or a replaced orphan dir is a different key and can never
-serve stale rows.  The first read of a version is the plain union of scans,
-so a one-shot caller (write, then return ``df()``) pays nothing for a cache
-it would not reuse.  A superseded frame stays pinned until the next swap
-(in-flight readers of it finish on memory), so at most two versions are
-pinned per instance; ``drop()`` and instance collection release both.  The
-pin applies only to tables of at most ``PIN_MAX_BYTES`` parquet bytes, the
-measured size where one in-memory partition stops beating the parallel
-scan; a larger table, time travel and the legacy-snapshot path read the
-unpinned union of scans.  Searches, GETs, counts and every mutator's base
-read go through ``df()``, so all of them share the pin.
+in-memory index).  ``snapshot()`` builds it once per version, on the first
+serving read, from the version's union of cell scans; the instance keeps it
+in a single lock-guarded slot keyed on (version, manifest inode, manifest
+mtime), so a drop-and-recreate or a replaced orphan dir is a different key
+and can never serve stale rows.  ``search.search`` / ``search.count``
+render the compiled query to ``pyarrow.compute`` over it, so a served read
+runs no Spark job.  The snapshot applies only to tables of at most
+``PIN_MAX_BYTES`` parquet bytes (a bound on the driver memory it costs); a
+larger table and the legacy-snapshot path are served by the Spark plan over
+``df()``.  ``df()`` itself is always the union of scans: mutators, time
+travel, ``IndexedCatalog`` and registry entries read it.
 
 Scale notes (100 TB ingestion): mutations are expressed as *batch merges*
 (anti-join + union), never per-row loops — ``bulk_upsert`` is the primitive
 and single-entry ops delegate to it, so the same code path micro-batches.
-On the unpinned read path the isPublic partitioning doubles as the pruning
-layout: the security predicate of every search skips whole directories
-(io.write_partitioned has the same layout for the search-side fixture).
+On the Spark read path (``df()``) the isPublic partitioning doubles as the
+pruning layout: the security predicate of every search skips whole
+directories (io.write_partitioned has the same layout for the search-side
+fixture).
 Within a partition the next granularity step is orgUUID bucketing — the
 manifest generalizes unchanged (key = partition/bucket path)."""
 
@@ -61,8 +59,9 @@ import shutil
 import tempfile
 import threading
 import uuid
-import weakref
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -81,58 +80,44 @@ from .schema import (
 _UNSET = object()  # sentinel: _commit resolves the base version itself
 
 
-class _Pin:
-    """The serving-snapshot slot: the latest version's key and persisted
-    frame (None when the version is above the size bound), plus the frame
-    it superseded, released at the next swap."""
+class _Slot:
+    """The serving-snapshot slot: the latest version's key and Arrow table
+    (None when the version is above the size bound)."""
 
     def __init__(self):
         self.lock = threading.Lock()
         self.key = None
-        self.seen = None  # key of a version read once, not yet pinned
-        self.frame: DataFrame | None = None
-        self.retired: DataFrame | None = None
-
-    def release(self) -> None:
-        for frame in (self.frame, self.retired):
-            if frame is not None:
-                frame.unpersist()
-        self.key = self.seen = self.frame = self.retired = None
-
-
-def _release_pin(pin: _Pin) -> None:
-    try:
-        with pin.lock:
-            pin.release()
-    except Exception:  # noqa: BLE001 — the session may already be stopped
-        pass
+        self.table: pa.Table | None = None
 
 
 class DatasetsCatalog:
     """A parquet-backed catalog table with id-keyed upsert semantics."""
 
-    # attempts of a single-entry write (upsert / partial_update / delete)
-    # that lost the optimistic commit race to another writer; each retry
-    # re-reads the new base before recomputing its post-image
+    # attempts of a write (single-entry or bulk) that lost the optimistic
+    # commit race to another writer; each retry re-reads the new base
+    # before recomputing its post-image
     COMMIT_ATTEMPTS = 4
 
     # The serving snapshot's size bound, in parquet bytes of the version's
-    # cells.  Measured on a 4-core box (1 GB driver heap; 3 readers
-    # searching, GETting and counting while 1 writer commits): against the
-    # unpinned scan the one-partition pin wins at 2.7 MiB (40k entries),
-    # ties at 4.1 MiB (60k) and loses at 5.4 MiB (80k), where one task per
-    # read and the rebuild after each commit cost more than the cache
-    # saves.  Four partitions instead of one only tied at 5.4 MiB.  Other
-    # core counts are unmeasured.
-    PIN_MAX_BYTES = 3 * 1024 * 1024
+    # cells.  It bounds driver memory, not latency: the Arrow snapshot
+    # answered searches faster than the Spark plan at every size measured.
+    # Measured on a 4-core box (1 GB driver heap) with entries shaped like
+    # the benchmark's catalog: the Arrow table is 2.8-3.4x its parquet
+    # bytes, and building one grows the Python process by 0.9-1.5x the
+    # table (20k entries: 1.4 MiB parquet, 4.6 MiB Arrow, +7 MiB RSS; 160k:
+    # 12.6, 36.5, +32; 320k: 26.6, 72.9, +64).  Readers still running on a
+    # superseded table keep it alive, so two versions can be resident at
+    # once: 16 MiB of parquet (about 200k entries, at most ~54 MiB of
+    # Arrow) caps the snapshot at 100-160 MiB of driver memory.  Search p50
+    # over the snapshot was 9 / 31 / 60 / 134 ms at 20k / 80k / 160k / 320k
+    # entries, against 810-1270 ms for the Spark plan.
+    PIN_MAX_BYTES = 16 * 1024 * 1024
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self._pin = _Pin()
+        self._slot = _Slot()
         self._write_lock = threading.Lock()
-        # a discarded instance must not leave its snapshot in executor memory
-        weakref.finalize(self, _release_pin, self._pin).atexit = False
 
     # -- DDL ---------------------------------------------------------------
 
@@ -152,8 +137,8 @@ class DatasetsCatalog:
 
     def drop(self) -> None:
         """S8: drop the whole table (elastic_admin.py:41-52)."""
-        with self._pin.lock:
-            self._pin.release()
+        with self._slot.lock:
+            self._slot.key = self._slot.table = None
         if os.path.isdir(self.path):
             shutil.rmtree(self.path)
 
@@ -370,21 +355,15 @@ class DatasetsCatalog:
     # -- reads -------------------------------------------------------------
 
     def df(self, version: int | None = None) -> DataFrame:
-        """Current table, or a time-travel read of an older snapshot.
-
-        When ``version`` resolves to the latest committed version, the
-        instance has read it before, and the table fits ``PIN_MAX_BYTES``,
-        this is the instance's persisted serving snapshot (``_pinned``):
-        one in-memory frame per version, shared by every read until the
-        next commit.
-
-        Otherwise it is the union of the per-(partition, org-bucket) scans
-        the version's manifest points at.  On this unpinned path a filter
-        on isPublic collapses the non-matching partition's branches at
-        optimization time; per-partition branch count is bounded by
-        N_BUCKETS.  Scans owned by the SAME snapshot are read as one
-        multi-directory scan, so the plan has at most one branch per
-        (owner, partition-value) — not one per bucket."""
+        """Current table, or a time-travel read of an older snapshot: the
+        union of the per-(partition, org-bucket) scans the version's
+        manifest points at, for every caller (served reads use
+        ``snapshot()`` instead).  A filter on isPublic collapses the
+        non-matching partition's branches at optimization time;
+        per-partition branch count is bounded by N_BUCKETS.  Scans owned by
+        the SAME snapshot are read as one multi-directory scan, so the plan
+        has at most one branch per (owner, partition-value) — not one per
+        bucket."""
         self.create_if_not_exists()
         if version is None:
             version = self._latest_version()
@@ -395,10 +374,6 @@ class DatasetsCatalog:
         # manifest probe landing in the move→manifest window combined with
         # a LATER latest read could misclassify the in-flight dir as legacy
         latest = self._latest_version()
-        if version == latest:
-            pinned = self._pinned(version)
-            if pinned is not None:
-                return pinned
         manifest = self._manifest(version)
         if manifest is None:
             # re-probe once — the concurrent commit may have just finished
@@ -423,47 +398,46 @@ class DatasetsCatalog:
             return self._read_legacy_snapshot(version)
         return self._read_cells(manifest)
 
-    def _pinned(self, version: int) -> DataFrame | None:
-        """The persisted serving frame of committed ``version``, or None to
-        send the caller down the unpinned path: a legacy manifest-less
-        snapshot, a table above ``PIN_MAX_BYTES``, or the FIRST read of the
-        version.  Only a version this instance reads a second time is
-        pinned, so a one-shot caller (write, then return ``df()``) keeps
-        the parallel, partition-pruned scan and pays nothing for a cache
-        it would not reuse.
+    def snapshot(self) -> pa.Table | None:
+        """The latest committed version as one driver-resident Arrow table,
+        which served searches, GETs and counts query — or None for a
+        legacy manifest-less snapshot or a table above ``PIN_MAX_BYTES``
+        (the caller then queries ``df()``).
 
-        The slot key is (version, manifest inode, manifest mtime): the
-        manifest is written once per snapshot dir, so a dropped and
-        recreated table or a replaced orphan dir gets a new key even at
-        the same version number.  The key is taken BEFORE the manifest is
-        read, so a frame is never filed under a newer key than its data."""
-        try:
-            st = os.stat(self._manifest_path(version))
-        except OSError:
-            return None
-        key = (version, st.st_ino, st.st_mtime_ns)
-        pin = self._pin
-        with pin.lock:
-            if pin.key == key:
-                return pin.frame
-            if pin.seen != key:
-                pin.seen = key
+        Built once per version, by the first serving read of it, under the
+        slot lock, so concurrent first readers wait for one build instead
+        of each running their own.  The slot key is (version, manifest
+        inode, manifest mtime): the manifest is written once per snapshot
+        dir, so a dropped and recreated table or a replaced orphan dir gets
+        a new key even at the same version number.  The key is taken
+        BEFORE the manifest is read, so a table is never filed under a
+        newer key than its data.  The superseded table is dropped from the
+        slot before the build; readers still holding it finish on it."""
+        self.create_if_not_exists()
+        slot = self._slot
+        with slot.lock:
+            version = self._latest_version()
+            if version is None:  # a racing drop
                 return None
-            manifest = self._manifest(version)
-            if manifest is None:
+            try:
+                st = os.stat(self._manifest_path(version))
+            except OSError:  # legacy manifest-less snapshot
                 return None
-            nbytes = sum(
-                e.stat().st_size
-                for cell, owner in manifest.items()
-                for e in self._cell_files(owner, cell)
-            )
-            frame = None
-            if nbytes <= self.PIN_MAX_BYTES:
-                frame = self._read_cells(manifest).coalesce(1).persist()
-            if pin.retired is not None:
-                pin.retired.unpersist()
-            pin.key, pin.frame, pin.retired = key, frame, pin.frame
-            return frame
+            key = (version, st.st_ino, st.st_mtime_ns)
+            if slot.key != key:
+                slot.key = slot.table = None
+                manifest = self._manifest(version)
+                if manifest is None:
+                    return None
+                nbytes = sum(
+                    e.stat().st_size
+                    for cell, owner in manifest.items()
+                    for e in self._cell_files(owner, cell)
+                )
+                if nbytes <= self.PIN_MAX_BYTES:
+                    slot.table = self._read_cells(manifest).toArrow().combine_chunks()
+                slot.key = key
+            return slot.table
 
     def _read_cells(self, manifest: dict[str, int]) -> DataFrame:
         """Union-of-scans over the cells a (sub)manifest points at — the
@@ -562,14 +536,23 @@ class DatasetsCatalog:
         )
 
     def get(self, entry_id: str) -> dict:
-        """S2: point lookup by id; EntryNotFoundError -> 404."""
-        rows = self.df().where(F.col("id") == F.lit(entry_id)).limit(1).collect()
+        """S2: point lookup by id, from the serving snapshot when there is
+        one; EntryNotFoundError -> 404."""
+        snap = self.snapshot()
+        if snap is not None:
+            rows = snap.filter(pc.equal(snap["id"], entry_id)).slice(0, 1).to_pylist()
+        else:
+            rows = [
+                r.asDict()
+                for r in self.df().where(F.col("id") == F.lit(entry_id)).limit(1).collect()
+            ]
         if not rows:
             raise EntryNotFoundError(entry_id)
-        return rows[0].asDict()
+        return rows[0]
 
     def count(self) -> int:
-        return self.df().count()
+        snap = self.snapshot()
+        return snap.num_rows if snap is not None else self.df().count()
 
     # -- writes ------------------------------------------------------------
 
@@ -579,19 +562,17 @@ class DatasetsCatalog:
         Returns True when created, False when updated (the reference's
         201-vs-200 distinction, metadata_entry.py:169-181).
         """
-        created, _ = self._retry_lost_race(
-            lambda: self.bulk_upsert([(entry_id, entry)])
-        )
+        created, _ = self.bulk_upsert([(entry_id, entry)])
         return entry_id in created
 
     def _retry_lost_race(self, write):
-        """Run a single-entry write.  The instance's single-entry writes
-        take turns, so threads of one server never race each other's
-        commit.  A write that loses the optimistic commit race to another
-        instance or process runs again — each attempt re-reads the new
-        base — up to COMMIT_ATTEMPTS times.  A conflict with no newer
-        committed version (lock timeout, broken lock) is not a lost race
-        and surfaces at once."""
+        """Run a write: ``write`` is one attempt (one base read, one
+        commit).  The instance's writes take turns, so threads of one
+        server never race each other's commit.  A write that loses the
+        optimistic commit race to another instance or process runs again —
+        each attempt re-reads the new base — up to COMMIT_ATTEMPTS times.
+        A conflict with no newer committed version (lock timeout, broken
+        lock) is not a lost race and surfaces at once."""
         with self._write_lock:
             for attempt in range(1, self.COMMIT_ATTEMPTS + 1):
                 base = self._latest_version()
@@ -611,7 +592,8 @@ class DatasetsCatalog:
 
         With ``skip_invalid`` mirrors the admin bulk load (invalid rows are
         skipped and reported, elastic_admin.py:54-83); otherwise the first
-        invalid entry raises (the PUT path).
+        invalid entry raises (the PUT path).  Entries are validated once;
+        a merge that loses the commit race re-runs on the new base.
         """
         rows, rejects = [], []
         for entry_id, entry in entries:
@@ -626,10 +608,11 @@ class DatasetsCatalog:
             rows.append(body)
         if not rows:
             return set(), rejects
-        return self._merge_rows(rows), rejects
+        return self._retry_lost_race(lambda: self._merge_rows(rows)), rejects
 
     def _merge_rows(self, rows: list[dict]) -> set:
         """MERGE post-validated full rows keyed on id; returns created ids.
+        One attempt: the callers run it through ``_retry_lost_race``.
 
         anti-join + union == WHEN MATCHED UPDATE / NOT MATCHED INSERT for
         whole-row replacement; plan size is independent of batch
@@ -836,6 +819,18 @@ class DatasetsCatalog:
             )
         )
 
+        self._retry_lost_race(lambda: self._merge_batch(post))
+        # stash the committed batch rows for composite writers: under
+        # whole-row replacement ``post`` IS the committed content for every
+        # merged id, so an index layered on this catalog can reindex from
+        # the (checkpoint-backed, batch-sized) frame instead of re-scanning
+        # the bucketed table it just wrote (IndexedCatalog.bulk_upsert_df)
+        self._last_merged_rows = post
+        return n_valid, int(n_total) - n_valid
+
+    def _merge_batch(self, post: DataFrame) -> None:
+        """One MERGE attempt of ``bulk_upsert_df``'s validated, deduplicated
+        batch against the latest base."""
         self.create_if_not_exists()
         base = self._latest_version()
         current = self.df(version=base)
@@ -858,13 +853,6 @@ class DatasetsCatalog:
         touched = {(r["p"], r["b"]) for r in touched_rows}
         merged = current.join(batch_ids, "id", "left_anti").unionByName(post)
         self._commit(merged, touched=touched, expected_version=base)
-        # stash the committed batch rows for composite writers: under
-        # whole-row replacement ``post`` IS the committed content for every
-        # merged id, so an index layered on this catalog can reindex from
-        # the (checkpoint-backed, batch-sized) frame instead of re-scanning
-        # the bucketed table it just wrote (IndexedCatalog.bulk_upsert_df)
-        self._last_merged_rows = post
-        return n_valid, int(n_total) - n_valid
 
     def partial_update(self, entry_id: str, patch: dict) -> None:
         """S4: patch a subset of fields of one document.

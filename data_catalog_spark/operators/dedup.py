@@ -109,6 +109,17 @@ def _shingles(df: DataFrame) -> DataFrame:
 # -- exact dedup -------------------------------------------------------------
 
 
+def _fps_sql(view: str) -> str:
+    """The exact content fingerprint SELECT, ``(doc_id, fp)`` with ``fp`` =
+    md5 of the space-joined normalized token stream, over a documents
+    view — the one Spark SQL text of it (DEDUP_EXACT_ORACLE is its DuckDB
+    twin)."""
+    return (
+        f"SELECT doc_id, md5(concat_ws(' ', t)) AS fp "
+        f"FROM (SELECT doc_id, {SPARK_TOKENS} AS t FROM {view})"
+    )
+
+
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-groupBy exact dedup on the normalized token stream: one shuffle
     on md5, keeper = min doc_id per group.  Batch analytics: fingerprints
@@ -116,11 +127,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     on plain batch entries); dedup_incremental's exact arm keeps the
     shared exact_fps_table."""
     _docs(spark, sf_dir).createOrReplaceTempView("__xd_docs")
-    d = _mh_dialect("spark")
-    fps = spark.sql(
-        f"SELECT doc_id, md5(concat_ws(' ', t)) AS fp "
-        f"FROM (SELECT doc_id, {d['tokens']} AS t FROM __xd_docs)"
-    )
+    fps = spark.sql(_fps_sql("__xd_docs"))
     return (
         fps.groupBy("fp")
         .agg(
@@ -506,16 +513,13 @@ def mh_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def exact_fps_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, fp) exact content fingerprints (md5 of the normalized
-    token stream) over ALL documents — checkpointed + memoized
-    (consumers: dedup_exact, dedup_incremental's exact arm)."""
+    token stream) over ALL documents — written once + memoized for
+    dedup_incremental's exact arm.  dedup_exact computes the same SQL text
+    (``_fps_sql``) per invocation instead of reading this table."""
 
     def build() -> DataFrame:
         _docs(spark, sf_dir).createOrReplaceTempView("__xfp_docs")
-        d = _mh_dialect("spark")
-        return spark.sql(
-            f"SELECT doc_id, md5(concat_ws(' ', t)) AS fp "
-            f"FROM (SELECT doc_id, {d['tokens']} AS t FROM __xfp_docs)"
-        )
+        return spark.sql(_fps_sql("__xfp_docs"))
 
     return _derived(spark, sf_dir, "exact-fps", build)
 
@@ -923,11 +927,7 @@ def build_mh_sig_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % NEW_BATCH_MOD != 0
     ).createOrReplaceTempView("__mhidx_docs")
     sig = mh_signatures(spark, "__mhidx_docs")
-    d = _mh_dialect("spark")
-    fps = spark.sql(
-        f"SELECT doc_id, md5(concat_ws(' ', t)) AS fp "
-        f"FROM (SELECT doc_id, {d['tokens']} AS t FROM __mhidx_docs)"
-    )
+    fps = spark.sql(_fps_sql("__mhidx_docs"))
     return sig.join(fps, "doc_id")
 
 
@@ -1157,11 +1157,7 @@ def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id") % NEW_BATCH_MOD == 0
         ).createOrReplaceTempView("__incx_new")
         if want_fp:
-            d = _mh_dialect("spark")
-            new = spark.sql(
-                f"SELECT doc_id, md5(concat_ws(' ', t)) AS fp "
-                f"FROM (SELECT doc_id, {d['tokens']} AS t FROM __incx_new)"
-            )
+            new = spark.sql(_fps_sql("__incx_new"))
         else:
             new = mh_signatures(spark, "__incx_new")
         return new.unionByName(idx_part)

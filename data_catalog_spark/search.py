@@ -1,4 +1,5 @@
-"""Execute a CompiledQuery as a PySpark DataFrame plan.
+"""Execute a CompiledQuery as a PySpark DataFrame plan, or over the served
+Arrow snapshot.
 
 Spark rendering of the same IR that ``query.sqlgen`` renders to oracle SQL.
 All predicates/score expressions are built from built-in functions (lower/
@@ -15,19 +16,35 @@ filter of every query — partitioning the catalog table by isPublic and
 bucketing by orgUUID turns it into partition pruning.  Ranked pagination
 compiles to TakeOrderedAndProject (top from+size per partition, merged on the
 driver) — no global sort.  Facets are partial-aggregated map-side.
+
+Arrow rendering (bottom of the module): the same IR rendered to
+``pyarrow.compute`` over a ``pyarrow.Table``.  The catalog serves searches,
+GETs and counts from one driver-resident Arrow table of its latest version
+(``DatasetsCatalog.snapshot``), so ``search`` and ``count`` dispatch on the
+source they get: a DataFrame runs the Spark plan, a Table is answered in
+the driver with no Spark job.  Lowercasing differs between the two: Arrow's
+``utf8_lower`` (like the DuckDB oracle and Lucene's LowerCaseFilter) lowers
+each code point on its own, Spark's ``lower`` applies Java's full case
+mapping (ARCHITECTURE "Known divergences").
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import analyzers
 from .query.compiler import (
     CATEGORIES_FACET_SIZE,
+    DATASAMPLE_BOOST,
     FORMATS_FACET_SIZE,
+    SOURCEURI_BOOST,
+    TITLE_BOOST,
     CompiledQuery,
     OrGroup,
     RangeFilter,
@@ -38,12 +55,16 @@ from .schema import COLUMN_ORDER, IS_PUBLIC_FIELD, ORG_UUID_FIELD
 _NUMERIC_FIELDS = frozenset({"recordCount", "size"})
 
 
+def _compares_raw(fld: str) -> bool:
+    """Exact-match fields (boolean/numeric/not_analyzed orgUUID) compare
+    raw; analyzed string fields compare lowercased (P1)."""
+    return fld == IS_PUBLIC_FIELD or fld == ORG_UUID_FIELD or fld in _NUMERIC_FIELDS
+
+
 def predicate_column(f) -> Column:
     """Render one IR filter to a Spark Column (mirrors sqlgen.predicate_sql)."""
     if isinstance(f, TermsFilter):
-        # exact-match fields (boolean/numeric/not_analyzed orgUUID) compare
-        # raw; analyzed string fields compare lowercased (P1)
-        if f.fld == IS_PUBLIC_FIELD or f.fld == ORG_UUID_FIELD or f.fld in _NUMERIC_FIELDS:
+        if _compares_raw(f.fld):
             expr = F.col(f.fld)
         else:
             expr = F.lower(F.col(f.fld))
@@ -71,17 +92,24 @@ def text_clause_columns(text: str) -> list[tuple[Column, float]]:
     """The 3 boosted text clauses (T1-T3) as Columns — same patterns as the
     oracle renderer (analyzers.token_match_pattern is shared)."""
     clauses: list[tuple[Column, float]] = [
-        (F.lower(F.col("title")).contains(text.lower()), 3.0)
+        (F.lower(F.col("title")).contains(text.lower()), TITLE_BOOST)
     ]
+    std, uri = _token_patterns(text)
+    if std:
+        clauses.append((F.lower(F.col("dataSample")).rlike(std), DATASAMPLE_BOOST))
+    if uri:
+        clauses.append((F.lower(F.col("sourceUri")).rlike(uri), SOURCEURI_BOOST))
+    return clauses
+
+
+def _token_patterns(text: str) -> tuple[str | None, str | None]:
+    """The dataSample (standard analyzer) and sourceUri (uri_analyzer)
+    token-match patterns of a query text; None where it has no token."""
     std = analyzers.token_match_pattern(
         analyzers.standard_tokens(text), analyzers.STANDARD_SPLIT
     )
-    if std:
-        clauses.append((F.lower(F.col("dataSample")).rlike(std), 2.0))
     uri = analyzers.token_match_pattern(analyzers.uri_tokens(text), analyzers.URI_SPLIT)
-    if uri:
-        clauses.append((F.lower(F.col("sourceUri")).rlike(uri), 1.0))
-    return clauses
+    return std, uri
 
 
 def _clauses(cq: CompiledQuery, clauses=None) -> list[tuple[Column, float]]:
@@ -298,11 +326,10 @@ def facets_and_total(
         .collect()
     )
     def topk(fld: str, size: int, gc: int, gf: int) -> list[str]:
-        buckets = [
-            (r["cnt"], r[fld]) for r in rows if r["gc"] == gc and r["gf"] == gf
-        ]
-        buckets.sort(key=lambda t: (-t[0], t[1]))
-        return [v for _, v in buckets[:size]]
+        return _top_buckets(
+            [(r["cnt"], r[fld]) for r in rows if r["gc"] == gc and r["gf"] == gf],
+            size,
+        )
 
     cats = topk("category", CATEGORIES_FACET_SIZE, 0, 1)
     fmts = topk("format", FORMATS_FACET_SIZE, 1, 0)
@@ -310,6 +337,15 @@ def facets_and_total(
         (int(r["post_cnt"]) for r in rows if r["gc"] == 1 and r["gf"] == 1), 0
     )
     return cats, fmts, total_n
+
+
+def _top_buckets(buckets, size: int) -> list:
+    """The facet's top ``size`` keys of (count, value) buckets: count desc,
+    then value asc with a null value last (the oracle's ORDER BY cnt DESC,
+    value).  Bounded by the field's distinct values, so it runs on the
+    driver for both renderers."""
+    ordered = sorted(buckets, key=lambda b: (-b[0], b[1] is None, b[1] or ""))
+    return [v for _, v in ordered[:size]]
 
 
 @dataclass
@@ -323,11 +359,19 @@ class SearchResult:
     formats: list[str]
 
 
-def search(df: DataFrame, cq: CompiledQuery) -> SearchResult:
-    """Full faceted search — the one driver-side collect point (final page +
-    facet keys + count only; never the full match set).  Two jobs total:
-    the ranked hits page, and the one-pass facets+total aggregation, both
-    over one shared query-filtered frame (its Column tree is built once)."""
+def search(src: DataFrame | pa.Table, cq: CompiledQuery) -> SearchResult:
+    """Full faceted search over a DataFrame or the catalog's Arrow snapshot.
+
+    A ``pyarrow.Table`` is answered in the driver by ``arrow_search``, with
+    no Spark job.  A DataFrame runs the Spark plan, the one driver-side
+    collect point (final page + facet keys + count only; never the full
+    match set): the ranked hits page is one job, and the one-pass
+    facets+total aggregation is two more, because its grouping-sets
+    ``Expand`` forces an Exchange.  Both plans share one query-filtered
+    frame (its Column tree is built once)."""
+    if isinstance(src, pa.Table):
+        return arrow_search(src, cq)
+    df = src
     clauses = _clauses(cq)
     filtered = query_filtered(df, cq, clauses)
     hit_rows = [
@@ -335,6 +379,14 @@ def search(df: DataFrame, cq: CompiledQuery) -> SearchResult:
     ]
     cats, fmts, n = facets_and_total(df, cq, filtered=filtered)
     return SearchResult(hits=hit_rows, total=n, categories=cats, formats=fmts)
+
+
+def count(src: DataFrame | pa.Table, cq: CompiledQuery) -> int:
+    """Rows in the query context (security + query filters + text match),
+    the count endpoint's answer; dispatches like ``search``."""
+    if isinstance(src, pa.Table):
+        return arrow_query_filtered(src, cq)[0].num_rows
+    return query_filtered(src, cq).count()
 
 
 def create_secure_view(
@@ -364,3 +416,120 @@ def create_secure_view(
     secured = df.where(query_predicate(cq))
     secured.createOrReplaceTempView(name)
     return secured
+
+
+# -- Arrow rendering: the served snapshot -----------------------------------
+#
+# Masks are boolean arrays over the table; a comparison with a null reads
+# as false.  The predicates are monotone (AND/OR, no NOT), so that keeps
+# exactly the rows Spark's and SQL's three-valued WHERE keeps.
+
+
+def _all_of(masks):
+    """AND of the masks; None (every row) when there are none."""
+    out = None
+    for m in masks:
+        out = m if out is None else pc.and_(out, m)
+    return out
+
+
+def predicate_mask(table: pa.Table, f):
+    """Render one IR filter to a boolean mask (predicate_column's twin)."""
+    if isinstance(f, TermsFilter):
+        col = table[f.fld]
+        if not _compares_raw(f.fld):
+            col = pc.utf8_lower(col)
+        # is_in reads a null input as false
+        return pc.is_in(col, value_set=pa.array(list(f.values), type=col.type))
+    if isinstance(f, RangeFilter):
+        col = table[f.fld]
+        bounds = []
+        if f.lo is not None:
+            bounds.append(pc.fill_null(pc.greater_equal(col, f.lo), False))
+        if f.hi is not None:
+            bounds.append(pc.fill_null(pc.less_equal(col, f.hi), False))
+        out = _all_of(bounds)
+        return out if out is not None else pa.array(np.ones(table.num_rows, bool))
+    if isinstance(f, OrGroup):
+        out = None
+        for x in f.filters:
+            m = predicate_mask(table, x)
+            out = m if out is None else pc.or_(out, m)
+        return out
+    raise TypeError(f"unknown filter {f!r}")
+
+
+def text_clause_masks(table: pa.Table, text: str) -> list:
+    """The 3 boosted text clauses as (mask, boost) — text_clause_columns'
+    twin: ``utf8_lower`` + ``match_substring`` for the title,
+    ``match_substring_regex`` (RE2, like the oracle) for the token
+    patterns."""
+    clauses = [
+        (pc.match_substring(pc.utf8_lower(table["title"]), text.lower()), TITLE_BOOST)
+    ]
+    std, uri = _token_patterns(text)
+    if std:
+        clauses.append(
+            (pc.match_substring_regex(pc.utf8_lower(table["dataSample"]), std),
+             DATASAMPLE_BOOST)
+        )
+    if uri:
+        clauses.append(
+            (pc.match_substring_regex(pc.utf8_lower(table["sourceUri"]), uri),
+             SOURCEURI_BOOST)
+        )
+    return [(pc.fill_null(m, False), boost) for m, boost in clauses]
+
+
+def arrow_query_filtered(table: pa.Table, cq: CompiledQuery):
+    """(rows, score): the query-context rows of ``table`` (query_filtered's
+    twin) and their relevance scores (score_column's twin).  The filters
+    run first, so the text clauses only see rows the filters keep."""
+    keep = _all_of(predicate_mask(table, f) for f in cq.query_filters)
+    rows = table if keep is None else table.filter(keep)
+    if not cq.text:
+        return rows, pa.array(np.ones(rows.num_rows))
+    score, matched = None, None
+    for mask, boost in text_clause_masks(rows, cq.text):
+        part = pc.if_else(mask, boost, 0.0)
+        score = part if score is None else pc.add(score, part)
+        matched = mask if matched is None else pc.or_(matched, mask)
+    return rows.filter(matched), pc.filter(score, matched)
+
+
+def arrow_search(table: pa.Table, cq: CompiledQuery) -> SearchResult:
+    """``search`` over an Arrow table: the hits page ranked (score desc, id
+    asc) with ``from`` or the ``searchAfter`` cursor, the total after the
+    post-filters, and the facets over the pre-post-filter set."""
+    rows, score = arrow_query_filtered(table, cq)
+    cats = _arrow_facet(rows, "category", CATEGORIES_FACET_SIZE)
+    fmts = _arrow_facet(rows, "format", FORMATS_FACET_SIZE)
+    post = _all_of(predicate_mask(rows, f) for f in cq.post_filters)
+    if post is not None:
+        rows, score = rows.filter(post), pc.filter(score, post)
+    total_n = rows.num_rows
+    offset = cq.from_
+    if cq.search_after is not None:
+        after_score, after_id = cq.search_after
+        after = pc.or_(
+            pc.less(score, after_score),
+            pc.and_(pc.equal(score, after_score), pc.greater(rows["id"], after_id)),
+        )
+        rows, score, offset = rows.filter(after), pc.filter(score, after), 0
+    ranked = rows.select(COLUMN_ORDER).append_column("score", score)
+    if cq.size == 0 or ranked.num_rows <= offset:
+        page = []
+    else:
+        top = pc.select_k_unstable(
+            ranked, offset + cq.size, [("score", "descending"), ("id", "ascending")]
+        )
+        page = ranked.take(top[offset:]).to_pylist()
+    return SearchResult(hits=page, total=total_n, categories=cats, formats=fmts)
+
+
+def _arrow_facet(rows: pa.Table, fld: str, size: int) -> list:
+    counts = pc.value_counts(rows[fld])
+    return _top_buckets(
+        zip(counts.field("counts").to_pylist(), counts.field("values").to_pylist()),
+        size,
+    )

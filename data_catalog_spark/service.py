@@ -56,6 +56,12 @@ class DataCatalogService:
         self._del_downloader = delete_from_downloader or (lambda uri, token: True)
         self._del_publisher = delete_from_publisher or (lambda eid, token: True)
 
+    def _served(self):
+        """What searches and counts query: the catalog's Arrow snapshot of
+        its latest version, or ``df()`` when it has none."""
+        snap = self.catalog.snapshot()
+        return self.catalog.df() if snap is None else snap
+
     # -- GET /rest/datasets/<id> ------------------------------------------
 
     def get_entry(self, entry_id: str, org_uuid_list: list[str], is_admin: bool):
@@ -156,7 +162,7 @@ class DataCatalogService:
             cq = compile_query(query, org_uuid_list, dataset_filtering, is_admin)
         except InvalidQueryError as e:
             return {"error": str(e)}, 400
-        result = search_mod.search(self.catalog.df(), cq)
+        result = search_mod.search(self._served(), cq)
         return (
             {
                 "hits": result.hits,
@@ -180,8 +186,7 @@ class DataCatalogService:
             cq = compile_query({}, org_uuid_list, dataset_filtering, is_admin)
         except InvalidQueryError as e:
             return {"error": str(e)}, 400
-        df = search_mod.query_filtered(self.catalog.df(), cq)
-        return {"total": df.count()}, 200
+        return {"total": search_mod.count(self._served(), cq)}, 200
 
     # -- /admin/elastic -----------------------------------------------------
 

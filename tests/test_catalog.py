@@ -588,54 +588,63 @@ def test_lock_timeout_does_not_leak_tmp_snapshot(spark, tmp_path):
     assert all(s.startswith("v") for s in snaps), snaps
 
 
-# -- serving snapshot: reads of the latest version come from one pin -------
+# -- serving snapshot: reads of the latest version come from one Arrow table
 
 
 def _ids(cat) -> set:
     return {r.id for r in cat.df().collect()}
 
 
+def _served_ids(cat) -> set:
+    return set(cat.snapshot().column("id").to_pylist())
+
+
 def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
-def test_pinned_reads_see_every_write(spark, tmp_path):
-    """Read-your-writes through the pin after each kind of commit."""
-    cat = DatasetsCatalog(spark, str(tmp_path / "ryw"))
-    cat.upsert("a", ENTRY)
-    assert _ids(cat) == {"a"}
-    assert _ids(cat) == {"a"}  # the second read pins the version
-    assert cat.df() is cat.df()  # one frame per version: served from the pin
-    assert "InMemoryRelation" in cat.df()._jdf.queryExecution().optimizedPlan().toString()
-
-    cat.partial_update("a", {"title": "patched"})
-    assert cat.get("a")["title"] == "patched"
-
-    cat.bulk_upsert([("b", ENTRY), ("c", {**ENTRY, "isPublic": False})])
-    assert _ids(cat) == {"a", "b", "c"}
-
-    cat.delete("b")
-    assert _ids(cat) == {"a", "c"}
-    with pytest.raises(EntryNotFoundError):
-        cat.get("b")
-
-    batch = spark.createDataFrame(
-        [("d", "from a stream", "health", "s", "csv", 1, 1, "u",
+def _stream_batch(spark, entry_id: str):
+    return spark.createDataFrame(
+        [(entry_id, "from a stream", "health", "s", "csv", 1, 1, "u",
           ENTRY["targetUri"], True, "org03", "2015-02-13T13:00:00")],
         "id string, title string, category string, dataSample string, "
         "format string, recordCount bigint, size bigint, sourceUri string, "
         "targetUri string, isPublic boolean, orgUUID string, creationTime string",
     )
-    assert cat.bulk_upsert_df(batch) == (1, 0)
-    assert _ids(cat) == {"a", "c", "d"}
+
+
+def test_pinned_reads_see_every_write(spark, tmp_path):
+    """Read-your-writes through the serving snapshot after each kind of
+    commit: served ids, GET and count agree with the union of scans."""
+    import pyarrow as pa
+
+    cat = DatasetsCatalog(spark, str(tmp_path / "ryw"))
+    cat.upsert("a", ENTRY)
+    assert _served_ids(cat) == {"a"} == _ids(cat)
+    assert isinstance(cat.snapshot(), pa.Table)
+    assert cat.snapshot() is cat.snapshot()  # one table per version
+
+    cat.partial_update("a", {"title": "patched"})
+    assert cat.get("a")["title"] == "patched"
+
+    cat.bulk_upsert([("b", ENTRY), ("c", {**ENTRY, "isPublic": False})])
+    assert _served_ids(cat) == {"a", "b", "c"} == _ids(cat)
+
+    cat.delete("b")
+    assert _served_ids(cat) == {"a", "c"} == _ids(cat)
+    with pytest.raises(EntryNotFoundError):
+        cat.get("b")
+
+    assert cat.bulk_upsert_df(_stream_batch(spark, "d")) == (1, 0)
+    assert _served_ids(cat) == {"a", "c", "d"} == _ids(cat)
     assert cat.count() == 3
 
-    before = {r.id: r.asDict() for r in cat.df().collect()}
+    before = {r["id"]: r for r in cat.snapshot().to_pylist()}
     rep = cat.compact(max_files_per_cell=0)
     assert rep["version"] == cat._latest_version()
-    for _ in range(2):  # first read unpinned, second pinned
-        assert {r.id: r.asDict() for r in cat.df().collect()} == before
-    assert cat._pin.key[0] == rep["version"]
+    assert {r["id"]: r for r in cat.snapshot().to_pylist()} == before
+    assert {r.id: r.asDict() for r in cat.df().collect()} == before
+    assert cat._slot.key[0] == rep["version"]
 
 
 def test_second_instance_sees_commit_on_next_read(spark, tmp_path):
@@ -643,32 +652,35 @@ def test_second_instance_sees_commit_on_next_read(spark, tmp_path):
     a = DatasetsCatalog(spark, path)
     b = DatasetsCatalog(spark, path)
     a.upsert("x", ENTRY)
-    assert _ids(b) == {"x"} == _ids(b)  # the second read pins this version
-    assert b._pin.frame is not None
+    assert _served_ids(b) == {"x"}
+    assert b._slot.table is not None
     a.upsert("y", ENTRY)
-    assert _ids(b) == {"x", "y"} == _ids(b)
+    assert _served_ids(b) == {"x", "y"}
     a.delete("x")
-    assert b.count() == 1 == b.count()
+    assert b.count() == 1
+    with pytest.raises(EntryNotFoundError):
+        b.get("x")
 
 
 def test_drop_and_recreate_to_same_version_serves_new_rows(spark, tmp_path):
     """The slot key carries the manifest's inode and mtime, so a table
     dropped and rebuilt back to the same version number is a new key — for
-    the dropping instance and for another one that still holds the pin."""
+    the dropping instance and for another one that still holds the old
+    table."""
     path = str(tmp_path / "recreate")
     a = DatasetsCatalog(spark, path)
     b = DatasetsCatalog(spark, path)
     a.upsert("old", ENTRY)
     v = a._latest_version()
-    for cat in (a, b):  # both instances pin the old table
-        assert _ids(cat) == {"old"} == _ids(cat)
-        assert cat._pin.frame is not None
+    for cat in (a, b):  # both instances hold the old table
+        assert _served_ids(cat) == {"old"}
+        assert cat._slot.table is not None
     a.drop()
-    assert a._pin.key is None  # drop empties the slot
+    assert a._slot.key is None and a._slot.table is None  # drop empties the slot
     a.upsert("new", {**ENTRY, "title": "rebuilt"})
     assert a._latest_version() == v
     for cat in (a, b):
-        assert _ids(cat) == {"new"} == _ids(cat)
+        assert _served_ids(cat) == {"new"}
         assert cat.get("new")["title"] == "rebuilt"
 
 
@@ -686,23 +698,27 @@ def test_time_travel_to_vacuumed_version_still_raises(spark, tmp_path):
     assert cat.get("a")["title"] == "v3"
 
 
-def test_pin_holds_at_most_two_versions(spark, tmp_path):
-    """Ten commits with reads in between pin at most two versions: the
-    current one and the one it superseded."""
-    import gc
+def test_serving_reads_leave_no_persistent_rdd(spark, tmp_path):
+    """Ten commits with served searches, GETs and counts in between
+    persist nothing in Spark: the snapshot lives in the driver, and the
+    slot holds the latest version only."""
+    from data_catalog_spark.query import DataSetFiltering, compile_query
+    from data_catalog_spark import search
 
-    gc.collect()  # run finalizers of catalogs other tests left behind
+    cq = compile_query({"query": "great"}, ["org02"],
+                       DataSetFiltering.PRIVATE_AND_PUBLIC, False)
     cat = DatasetsCatalog(spark, str(tmp_path / "bounded"))
     cat.create_if_not_exists()
     base = _persistent_rdds(spark)
     for i in range(10):
         cat.upsert(f"e{i}", ENTRY)
         assert cat.count() == i + 1
-        assert cat.count() == i + 1  # the second read pins the version
-        assert cat._pin.key[0] == cat._latest_version()
-        assert _persistent_rdds(spark) - base <= 2
+        assert cat.get(f"e{i}")["id"] == f"e{i}"
+        assert search.search(cat.snapshot(), cq).total == i + 1
+        assert cat._slot.key[0] == cat._latest_version()
+        assert _persistent_rdds(spark) == base
     cat.drop()
-    assert _persistent_rdds(spark) <= base
+    assert _persistent_rdds(spark) == base
 
 
 def test_concurrent_readers_never_go_back_a_version(spark, tmp_path):
@@ -760,48 +776,57 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_first_read_of_a_version_is_unpinned(spark, tmp_path):
-    """A one-shot caller (write, then hand ``df()`` back) reads each
-    version once: it gets the union of scans, and nothing is persisted.
-    Only a second read of the same version pins it."""
+def test_df_is_the_union_of_scans_for_every_read(spark, tmp_path):
+    """``df()`` is the union of scans on every read of a version, before
+    and after the serving snapshot of that version exists, and nothing is
+    persisted; its rows are the snapshot's rows."""
     path = str(tmp_path / "once")
     _pin_fixture(spark, path)
     cat = DatasetsCatalog(spark, path)
     first = cat.df()
     assert "InMemoryRelation" not in _plan(first) and "Union" in _plan(first)
-    assert cat._pin.frame is None
+    assert cat._slot.table is None
+    served = cat.snapshot()
     second = cat.df()
-    assert "InMemoryRelation" in _plan(second)
-    assert sorted(map(tuple, first.collect())) == sorted(map(tuple, second.collect()))
+    assert "InMemoryRelation" not in _plan(second) and "Union" in _plan(second)
+    assert sorted(map(tuple, first.collect())) == sorted(
+        tuple(r.values()) for r in served.to_pylist()
+    )
 
 
 def test_pin_is_size_checked(spark, tmp_path, monkeypatch):
-    """Above PIN_MAX_BYTES (-1: every table) every read is the unpinned
-    union of scans, with the same answers."""
-    from data_catalog_spark import search
-    from data_catalog_spark.query import DataSetFiltering, compile_query
+    """Above PIN_MAX_BYTES (-1: every table) there is no snapshot and the
+    service answers searches, GETs and counts from the union of scans,
+    with the same answers as from the snapshot."""
+    from data_catalog_spark.query import DataSetFiltering
+    from data_catalog_spark.service import DataCatalogService
 
     path = str(tmp_path / "bound")
     _pin_fixture(spark, path)
-    cq = compile_query({"query": "great", "size": 5}, ["org01"],
-                       DataSetFiltering.PRIVATE_AND_PUBLIC, False)
+    queries = [{"query": "great", "size": 5}, {"query": "title 3"},
+               {"filters": [{"format": ["json"]}], "from": 2},
+               {"query": "great", "searchAfter": [3.0, "e4"]}, {"query": "nomatch"}]
 
-    def answers(cat):
-        cat.df()  # the first read never pins
-        df = cat.df()
-        return _plan(df), sorted(map(tuple, df.collect())), search.search(df, cq)
+    def answers(svc):
+        out = [svc.search(q, ["org01"], DataSetFiltering.PRIVATE_AND_PUBLIC)
+               for q in queries]
+        out.append(svc.count(["org02"]))
+        out.append(svc.get_entry("e5", [], True))
+        out.append(svc.catalog.count())
+        return out
 
-    plan, *want = answers(DatasetsCatalog(spark, path))
-    assert "InMemoryRelation" in plan
+    served = DataCatalogService(DatasetsCatalog(spark, path))
+    want = answers(served)
+    assert served.catalog._slot.table is not None
     monkeypatch.setattr(DatasetsCatalog, "PIN_MAX_BYTES", -1)
-    unpinned = DatasetsCatalog(spark, path)
-    plan, *got = answers(unpinned)
-    assert "InMemoryRelation" not in plan and "Union" in plan
-    assert unpinned._pin.frame is None
+    unpinned = DataCatalogService(DatasetsCatalog(spark, path))
+    got = answers(unpinned)
+    assert unpinned.catalog.snapshot() is None
+    assert unpinned.catalog._slot.key is not None  # checked once per version
     assert got == want
 
 
-# -- single-entry writes retry a lost commit race -------------------------
+# -- writes retry a lost commit race -------------------------
 
 
 def _racing(loser: DatasetsCatalog, rival: DatasetsCatalog, losses: int):
@@ -820,7 +845,9 @@ def _racing(loser: DatasetsCatalog, rival: DatasetsCatalog, losses: int):
     return calls
 
 
-@pytest.mark.parametrize("op", ["upsert", "partial_update", "delete"])
+@pytest.mark.parametrize(
+    "op", ["upsert", "partial_update", "delete", "bulk_upsert", "bulk_upsert_df"]
+)
 def test_lost_commit_race_retries_on_new_base(spark, tmp_path, op):
     path = str(tmp_path / op)
     a = DatasetsCatalog(spark, path)
@@ -830,6 +857,17 @@ def test_lost_commit_race_retries_on_new_base(spark, tmp_path, op):
     if op == "upsert":
         assert a.upsert("new", ENTRY) is True
         want = {"mine", "new", "rival1"}
+    elif op == "bulk_upsert":
+        # the admin bulk load: invalid rows are still skipped once
+        created, rejects = a.bulk_upsert(
+            [("n1", ENTRY), ("bad", {**ENTRY, "targetUri": "nope"}), ("mine", ENTRY)],
+            skip_invalid=True,
+        )
+        assert created == {"n1"} and [r[0] for r in rejects] == ["bad"]
+        want = {"mine", "n1", "rival1"}
+    elif op == "bulk_upsert_df":
+        assert a.bulk_upsert_df(_stream_batch(spark, "d")) == (1, 0)
+        want = {"mine", "d", "rival1"}
     elif op == "partial_update":
         a.partial_update("mine", {"title": "patched"})
         assert a.get("mine")["title"] == "patched"

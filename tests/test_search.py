@@ -4,6 +4,7 @@ on the derived `datasets` table (the same IR rendered by both backends)."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
 
 from data_catalog_spark import search
 from data_catalog_spark.datasets_source import ORACLE_DATASETS_CTE, datasets_df
@@ -384,3 +385,189 @@ def test_more_like_this_excludes_seed_and_requires_overlap(spark, sf_dir):
         assert r.id != MLT_SEED_ID
         assert r.n_shared >= 1
         assert r.score > 0
+
+
+# -- Arrow renderer (the served snapshot) vs the DuckDB oracle --------------
+
+
+@pytest.fixture(scope="module")
+def ds_arrow(ds):
+    return ds.toArrow()
+
+
+def _result(res) -> dict:
+    return {"hits": res.hits, "total": res.total,
+            "categories": res.categories, "formats": res.formats}
+
+
+def _oracle(con, cq, prelude: str = ORACLE_DATASETS_CTE) -> dict:
+    """The full search answer of ``query.sqlgen``: hit rows as dicts (with
+    score), total and both facets' keys."""
+    def rows(sql):
+        cur = con.execute(f"{prelude} {sql}")
+        names = [d[0] for d in cur.description]
+        return [dict(zip(names, r)) for r in cur.fetchall()]
+
+    return {
+        "hits": rows(sqlgen.hits_sql(cq)),
+        "total": rows(sqlgen.total_sql(cq))[0]["total"],
+        "categories": [r["value"] for r in rows(sqlgen.categories_facet_sql(cq))],
+        "formats": [r["value"] for r in rows(sqlgen.formats_facet_sql(cq))],
+    }
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_arrow_search_matches_oracle(name, ds_arrow, ddb):
+    cq = compile_query(*CASES[name])
+    want = _oracle(ddb, cq)
+    assert want["hits"], "every case has hits"
+    assert _result(search.search(ds_arrow, cq)) == want
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_arrow_count_matches_oracle(name, ds_arrow, ddb):
+    cq = compile_query(*CASES[name])
+    n = ddb.execute(
+        f"{ORACLE_DATASETS_CTE} SELECT count(*) FROM datasets "
+        f"WHERE {sqlgen.query_where_sql(cq)}"
+    ).fetchone()[0]
+    assert search.count(ds_arrow, cq) == n
+
+
+def test_arrow_search_after_tiles_offset_pages(ds_arrow, ddb):
+    """Cursor pages from each page's last (score, id) reproduce from/size
+    paging, and every page equals the oracle's."""
+    from data_catalog_spark.entries import ORGS
+
+    def page(extra):
+        cq = compile_query({"query": "widget", "size": 7, **extra}, ORGS,
+                           M.PRIVATE_AND_PUBLIC, False)
+        got = _result(search.search(ds_arrow, cq))
+        assert got == _oracle(ddb, cq)
+        return got["hits"]
+
+    tiled, cursor_hits, n = [], page({}), 0
+    while cursor_hits:
+        n += 1
+        tiled += cursor_hits
+        assert cursor_hits == page({"from": 7 * (n - 1)})
+        last = cursor_hits[-1]
+        cursor_hits = page({"searchAfter": [last["score"], last["id"]]})
+    assert n >= 3
+    assert [h["id"] for h in tiled] == [h["id"] for h in page({"size": 500})]
+
+
+@pytest.mark.parametrize("query", [
+    {"query": "zzzunmatched"},                          # nothing passes the query filter
+    {"filters": [{"format": ["nosuchformat"]}]},        # facets, but no post-filter hit
+    {"query": "widget", "searchAfter": [0.5, "0"]},     # a cursor past the last hit
+    {"query": "widget", "from": 5000},                  # an offset past the last hit
+    {"query": "widget", "size": 0},
+])
+def test_arrow_zero_hit_searches_match_oracle(query, ds_arrow, ddb):
+    cq = compile_query(query, ORGS, M.PRIVATE_AND_PUBLIC, False)
+    got = _result(search.search(ds_arrow, cq))
+    assert got["hits"] == []
+    assert got == _oracle(ddb, cq)
+
+
+# -- differential: Arrow vs Spark vs DuckDB on nulls and mixed case ---------
+
+_WORDS = ["Widget", "ECONOMY", "blue", "Cold", "steel", "tin", "Smoke"]
+
+
+def _mixed_rows(n: int = 60) -> list[dict]:
+    import random
+
+    rng = random.Random(7)
+
+    def text(k):
+        return " ".join(
+            w.upper() if rng.random() < 0.3 else w for w in rng.sample(_WORDS, k)
+        )
+
+    rows = []
+    for i in range(n):
+        rows.append({
+            "id": f"d{i:03d}",
+            "title": text(2),
+            "category": rng.choice(["brand#1", "Brand#2", "brand#3"]),
+            "dataSample": "id," + text(3).replace(" ", ","),
+            "format": rng.choice(["csv", "JSON", "parquet"]),
+            "recordCount": rng.randrange(5) * 100,
+            "size": rng.randrange(3) * 1024,
+            "sourceUri": "http://www.catalog.com/" + text(2).replace(" ", "/"),
+            "targetUri": f"hdfs://nn:8200/w/{i}/000000_1",
+            "storeType": None if i % 3 == 0 else "hdfs",
+            "isPublic": i % 2 == 0,
+            "orgUUID": f"org0{i % 3 + 1}",
+            "creationTime": None if i % 5 == 0 else f"2014-{i % 12 + 1:02d}-15T00:00:00",
+        })
+    return rows
+
+
+@pytest.fixture(scope="module")
+def mixed(spark):
+    import duckdb
+
+    from data_catalog_spark.schema import DATASETS_SCHEMA
+
+    df = spark.createDataFrame(_mixed_rows(), DATASETS_SCHEMA)
+    table = df.toArrow()
+    con = duckdb.connect()
+    con.register("datasets", table)
+    yield df, table, con
+    con.close()
+
+
+def _query_st():
+    from hypothesis import strategies as st
+
+    text = st.lists(st.sampled_from(_WORDS + ["widg", "COLD BLUE", "nomatch"]),
+                    min_size=1, max_size=2).map(
+        lambda ws: " ".join(w.swapcase() if len(w) % 2 else w for w in ws))
+    flt = st.one_of(
+        st.fixed_dictionaries({"format": st.lists(
+            st.sampled_from(["csv", "json", "Parquet"]), min_size=1, max_size=2)}),
+        st.fixed_dictionaries({"category": st.lists(
+            st.sampled_from(["BRAND#1", "brand#2", "brand#9"]), min_size=1, max_size=2)}),
+        st.fixed_dictionaries({"creationTime": st.tuples(
+            st.sampled_from([-1, "2014-03-01", "2014-06-15"]),
+            st.sampled_from([-1, "2014-09-30", "2014-12-31"])).map(list)}),
+        st.fixed_dictionaries({"recordCount": st.lists(
+            st.sampled_from([0, 100, 300]), min_size=1, max_size=2)}),
+    )
+    page = st.one_of(
+        st.fixed_dictionaries({"from": st.integers(0, 12), "size": st.integers(0, 15)}),
+        st.fixed_dictionaries({"searchAfter": st.tuples(
+            st.sampled_from([1.0, 2.0, 3.0, 5.0]),
+            st.sampled_from(["d010", "d031", "d050"])).map(list),
+            "size": st.integers(1, 10)}),
+    )
+    query = st.builds(
+        lambda t, fs, p: {**({"query": t} if t else {}), "filters": fs, **p},
+        st.one_of(st.none(), text), st.lists(flt, max_size=2), page)
+    scope = st.sampled_from([
+        (["org01"], M.PRIVATE_AND_PUBLIC, False),
+        (["org02", "ORG03"], M.ONLY_PRIVATE, False),
+        ([], M.ONLY_PUBLIC, False),
+        ([], M.PRIVATE_AND_PUBLIC, True),
+    ])
+    return query, scope
+
+
+_QUERY_ST, _SCOPE_ST = _query_st()
+
+
+@settings(max_examples=30, deadline=None)
+@given(query=_QUERY_ST, scope=_SCOPE_ST)
+def test_arrow_spark_and_oracle_agree(mixed, query, scope):
+    """One random compiled query over a fixture with null storeType and
+    creationTime and mixed-case text: the Arrow renderer, the Spark plan
+    and the DuckDB oracle give the same hits, total and facets."""
+    df, table, con = mixed
+    cq = compile_query(query, *scope)
+    want = _oracle(con, cq, prelude="")
+    assert _result(search.search(table, cq)) == want
+    assert _result(search.search(df, cq)) == want
+    assert search.count(table, cq) == search.count(df, cq)
