@@ -24,7 +24,10 @@ the same pattern is valid in Java regex and RE2.
 Scale note: matching via a codegen'd regexp over the scan beats materialized
 token-array columns for the catalog's short fields; at 100 TB a write-time
 token column + bloom filter / inverted index table would be layered on top,
-but correctness never depends on it.
+but correctness never depends on it.  The served path
+(``search.SearchIndex``) answers the same clauses from token postings of the
+lowered columns, split with these same classes, which give the regex's
+answer exactly (``token_match_pattern``).
 """
 
 from __future__ import annotations
@@ -51,9 +54,25 @@ ENGLISH_STOPWORDS = frozenset(
 )
 
 
+# Python's ``str.lower`` applies Unicode's full, context-sensitive case
+# mapping; lowered one character at a time, only U+0130 (İ) still maps to
+# more than one code point.
+_SIMPLE_LOWER = {"\u0130": "i"}
+
+
+def fold_case(text: str) -> str:
+    """Lower each code point on its own (Unicode's simple case mapping), as
+    Arrow's ``utf8_lower``, DuckDB's ``lower`` and Lucene's LowerCaseFilter
+    lower a column: ``"İSTANBUL"`` → ``"istanbul"`` (``str.lower`` gives
+    ``"i̇stanbul"``, i + U+0307) and a final ``"Σ"`` → ``"σ"`` (not
+    ``"ς"``).  Query text and analyzed filter values go through it, so
+    they fold the way the column they are compared with does."""
+    return "".join(_SIMPLE_LOWER.get(c) or c.lower() for c in text)
+
+
 def standard_tokens(text: str) -> list[str]:
     """Standard analyzer: lowercase, split on non-alphanumeric."""
-    return [t for t in _STANDARD_SPLIT_RE.split(text.lower()) if t]
+    return [t for t in _STANDARD_SPLIT_RE.split(fold_case(text)) if t]
 
 
 def english_tokens(text: str) -> list[str]:
@@ -67,7 +86,9 @@ def uri_tokens(text: str) -> list[str]:
     Reference: data_catalog/configuration_const.py:68-84; e.g.
     ``http://www.foo.com/bar`` -> ``[foo, bar]``.
     """
-    return [t for t in _URI_SPLIT_RE.split(text.lower()) if t and t not in URI_STOPWORDS]
+    return [
+        t for t in _URI_SPLIT_RE.split(fold_case(text)) if t and t not in URI_STOPWORDS
+    ]
 
 
 def token_match_pattern(tokens: list[str], split_class: str) -> str | None:

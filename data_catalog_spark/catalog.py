@@ -28,18 +28,19 @@ reference's explicit index flush for read-your-writes (bases.py:82, R8) is a
 no-op here: a committed snapshot is immediately visible to new reads.
 
 Serving snapshot: searches, GETs and counts of the LATEST committed version
-are answered from one driver-resident ``pyarrow.Table`` of that version (the
+are answered from one driver-resident ``search.SearchIndex`` of that
+version: its ``pyarrow.Table`` plus token postings and an id → row map (the
 reference answers every search, GET and count from Elasticsearch's
-in-memory index).  ``snapshot()`` builds it once per version, on the first
-serving read, from the version's union of cell scans; the instance keeps it
-in a single lock-guarded slot keyed on (version, manifest inode, manifest
-mtime), so a drop-and-recreate or a replaced orphan dir is a different key
-and can never serve stale rows.  ``search.search`` / ``search.count``
-render the compiled query to ``pyarrow.compute`` over it, so a served read
-runs no Spark job.  The snapshot applies only to tables of at most
-``PIN_MAX_BYTES`` parquet bytes (a bound on the driver memory it costs); a
-larger table and the legacy-snapshot path are served by the Spark plan over
-``df()``.  ``df()`` itself is always the union of scans: mutators, time
+in-memory inverted index).  ``snapshot()`` builds it once per version, on
+the first serving read, from the version's union of cell scans; the
+instance keeps it in a single lock-guarded slot keyed on (version, manifest
+inode, manifest mtime), so a drop-and-recreate or a replaced orphan dir is
+a different key and can never serve stale rows.  ``search.search`` /
+``search.count`` answer the compiled query from it in the driver, and a
+GET is an id lookup in it, so a served read runs no Spark job.  The
+snapshot applies only to tables of at most ``PIN_MAX_BYTES`` parquet bytes
+(a bound on the driver memory it costs); a larger table and the
+legacy-snapshot path are served by the Spark plan over ``df()``.  ``df()`` itself is always the union of scans: mutators, time
 travel, ``IndexedCatalog`` and registry entries read it.
 
 Scale notes (100 TB ingestion): mutations are expressed as *batch merges*
@@ -60,13 +61,12 @@ import tempfile
 import threading
 import uuid
 
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .errors import CommitConflictError, EntryNotFoundError, InvalidEntryError
+from .search import SearchIndex
 from .schema import (
     COLUMN_ORDER,
     CREATION_TIME_FIELD,
@@ -81,13 +81,13 @@ _UNSET = object()  # sentinel: _commit resolves the base version itself
 
 
 class _Slot:
-    """The serving-snapshot slot: the latest version's key and Arrow table
+    """The serving-snapshot slot: the latest version's key and search index
     (None when the version is above the size bound)."""
 
     def __init__(self):
         self.lock = threading.Lock()
         self.key = None
-        self.table: pa.Table | None = None
+        self.index: SearchIndex | None = None
 
 
 class DatasetsCatalog:
@@ -99,19 +99,26 @@ class DatasetsCatalog:
     COMMIT_ATTEMPTS = 4
 
     # The serving snapshot's size bound, in parquet bytes of the version's
-    # cells.  It bounds driver memory, not latency: the Arrow snapshot
+    # cells.  It bounds driver memory, not latency: the indexed snapshot
     # answered searches faster than the Spark plan at every size measured.
     # Measured on a 4-core box (1 GB driver heap) with entries shaped like
-    # the benchmark's catalog: the Arrow table is 2.8-3.4x its parquet
-    # bytes, and building one grows the Python process by 0.9-1.5x the
-    # table (20k entries: 1.4 MiB parquet, 4.6 MiB Arrow, +7 MiB RSS; 160k:
-    # 12.6, 36.5, +32; 320k: 26.6, 72.9, +64).  Readers still running on a
-    # superseded table keep it alive, so two versions can be resident at
-    # once: 16 MiB of parquet (about 200k entries, at most ~54 MiB of
-    # Arrow) caps the snapshot at 100-160 MiB of driver memory.  Search p50
-    # over the snapshot was 9 / 31 / 60 / 134 ms at 20k / 80k / 160k / 320k
-    # entries, against 810-1270 ms for the Spark plan.
-    PIN_MAX_BYTES = 16 * 1024 * 1024
+    # the benchmark's catalog, per size: parquet, Arrow table, build time
+    # of a snapshot (toArrow + index; the first reader after each commit
+    # waits for it), the index's share of that, and the Python RSS growth
+    # of the first build, which includes the allocator's slack from the
+    # build's temporaries.  20k entries: 1.4 MiB, 4.6 MiB, 0.40-0.59 s,
+    # 0.06-0.09 s, +16 MiB; 80k: 5.4, 18.2, 0.70-0.73 s, 0.20-0.22 s, +45;
+    # 160k: 10.6, 36.5, 1.11-1.21 s, 0.52-0.56 s, +74-80 (the table alone,
+    # without the index: 0.29 / 0.43 / 0.60 s and +5 / +20 / +39 MiB).
+    # The index keeps about a quarter of the table (lowered titles, int32
+    # postings and id order).  Readers still running on a superseded
+    # version keep it alive, so two versions can be resident at once:
+    # +117 MiB at 160k entries and +157 MiB at 210k (13.8 MiB of parquet).
+    # 12 MiB of parquet (about 180k entries) keeps that within 100-160 MiB
+    # of driver memory.  Search p50 over the snapshot was 3.7 / 9.4 / 20 ms
+    # at 20k / 80k / 160k entries (the unindexed table: 9.5 / 36 / 72 ms;
+    # the Spark plan: 810-1270 ms).
+    PIN_MAX_BYTES = 12 * 1024 * 1024
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -138,7 +145,7 @@ class DatasetsCatalog:
     def drop(self) -> None:
         """S8: drop the whole table (elastic_admin.py:41-52)."""
         with self._slot.lock:
-            self._slot.key = self._slot.table = None
+            self._slot.key = self._slot.index = None
         if os.path.isdir(self.path):
             shutil.rmtree(self.path)
 
@@ -398,20 +405,21 @@ class DatasetsCatalog:
             return self._read_legacy_snapshot(version)
         return self._read_cells(manifest)
 
-    def snapshot(self) -> pa.Table | None:
-        """The latest committed version as one driver-resident Arrow table,
-        which served searches, GETs and counts query — or None for a
-        legacy manifest-less snapshot or a table above ``PIN_MAX_BYTES``
-        (the caller then queries ``df()``).
+    def snapshot(self) -> SearchIndex | None:
+        """The latest committed version as one driver-resident
+        ``search.SearchIndex`` (its Arrow table, lowered titles, text
+        postings and id → row map), which served searches, GETs and counts
+        query — or None for a legacy manifest-less snapshot or a table
+        above ``PIN_MAX_BYTES`` (the caller then queries ``df()``).
 
         Built once per version, by the first serving read of it, under the
-        slot lock, so concurrent first readers wait for one build instead
-        of each running their own.  The slot key is (version, manifest
+        slot lock, so concurrent first readers wait for one build (the
+        ``toArrow`` read plus the index) instead of each running their own.  The slot key is (version, manifest
         inode, manifest mtime): the manifest is written once per snapshot
         dir, so a dropped and recreated table or a replaced orphan dir gets
         a new key even at the same version number.  The key is taken
         BEFORE the manifest is read, so a table is never filed under a
-        newer key than its data.  The superseded table is dropped from the
+        newer key than its data.  The superseded index is dropped from the
         slot before the build; readers still holding it finish on it."""
         self.create_if_not_exists()
         slot = self._slot
@@ -425,7 +433,7 @@ class DatasetsCatalog:
                 return None
             key = (version, st.st_ino, st.st_mtime_ns)
             if slot.key != key:
-                slot.key = slot.table = None
+                slot.key = slot.index = None
                 manifest = self._manifest(version)
                 if manifest is None:
                     return None
@@ -435,9 +443,9 @@ class DatasetsCatalog:
                     for e in self._cell_files(owner, cell)
                 )
                 if nbytes <= self.PIN_MAX_BYTES:
-                    slot.table = self._read_cells(manifest).toArrow().combine_chunks()
+                    slot.index = SearchIndex.build(self._read_cells(manifest).toArrow())
                 slot.key = key
-            return slot.table
+            return slot.index
 
     def _read_cells(self, manifest: dict[str, int]) -> DataFrame:
         """Union-of-scans over the cells a (sub)manifest points at — the
@@ -540,15 +548,13 @@ class DatasetsCatalog:
         one; EntryNotFoundError -> 404."""
         snap = self.snapshot()
         if snap is not None:
-            rows = snap.filter(pc.equal(snap["id"], entry_id)).slice(0, 1).to_pylist()
+            row = snap.row(entry_id)
         else:
-            rows = [
-                r.asDict()
-                for r in self.df().where(F.col("id") == F.lit(entry_id)).limit(1).collect()
-            ]
-        if not rows:
+            rows = self.df().where(F.col("id") == F.lit(entry_id)).limit(1).collect()
+            row = rows[0].asDict() if rows else None
+        if row is None:
             raise EntryNotFoundError(entry_id)
-        return rows[0]
+        return row
 
     def count(self) -> int:
         snap = self.snapshot()

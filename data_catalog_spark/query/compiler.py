@@ -24,7 +24,8 @@ Semantics preserved from the reference:
     * other modes: orgUUID/creationTime/isPublic -> query-filter;
       rest -> post-filter.
 - Value normalization: term values are stringified + lowercased
-  (query_translation.py:272); isPublic coerces to boolean.
+  (query_translation.py:272), per code point (``analyzers.fold_case``)
+  for analyzed fields; isPublic coerces to boolean.
 - Time range: exactly two values; ``-1`` opens that end; inclusive both
   ends (ES range from/to defaults — query_translation.py:278-291).
 - Validation errors -> InvalidQueryError (query_translation.py:245-263):
@@ -45,6 +46,7 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 
+from .. import analyzers
 from ..errors import InvalidQueryError
 from ..schema import (
     CREATION_TIME_FIELD,
@@ -162,9 +164,13 @@ def _translate_filter(fld: str, values) -> TermsFilter | RangeFilter | None:
             normalized = tuple(int(v) for v in values)
         except (TypeError, ValueError):
             raise InvalidQueryError(f"Filter values for {fld} must be integers.")
-    else:
-        # Lowercase once at compile time (query_translation.py:272).
+    elif fld == ORG_UUID_FIELD:
+        # not analyzed: lowered like the caller's org list (auth.py:157)
         normalized = tuple(str(v).lower() for v in values)
+    else:
+        # Lowercase once at compile time (query_translation.py:272), per
+        # code point like the analyzed column it is compared with.
+        normalized = tuple(analyzers.fold_case(str(v)) for v in values)
     return TermsFilter(fld, normalized)
 
 

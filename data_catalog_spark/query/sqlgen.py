@@ -79,7 +79,9 @@ def text_clauses_sql(text: str) -> list[tuple[str, float]]:
     Returns [(predicate_sql, boost)] — empty predicates are dropped.
     """
     clauses: list[tuple[str, float]] = []
-    clauses.append((f"contains(lower(title), {_lit(text.lower())})", TITLE_BOOST))
+    clauses.append(
+        (f"contains(lower(title), {_lit(analyzers.fold_case(text))})", TITLE_BOOST)
+    )
     std = analyzers.token_match_pattern(
         analyzers.standard_tokens(text), analyzers.STANDARD_SPLIT
     )

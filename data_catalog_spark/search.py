@@ -1,5 +1,5 @@
 """Execute a CompiledQuery as a PySpark DataFrame plan, or over the served
-Arrow snapshot.
+Arrow snapshot's search index.
 
 Spark rendering of the same IR that ``query.sqlgen`` renders to oracle SQL.
 All predicates/score expressions are built from built-in functions (lower/
@@ -17,19 +17,43 @@ bucketing by orgUUID turns it into partition pruning.  Ranked pagination
 compiles to TakeOrderedAndProject (top from+size per partition, merged on the
 driver) — no global sort.  Facets are partial-aggregated map-side.
 
-Arrow rendering (bottom of the module): the same IR rendered to
-``pyarrow.compute`` over a ``pyarrow.Table``.  The catalog serves searches,
-GETs and counts from one driver-resident Arrow table of its latest version
-(``DatasetsCatalog.snapshot``), so ``search`` and ``count`` dispatch on the
-source they get: a DataFrame runs the Spark plan, a Table is answered in
-the driver with no Spark job.  Lowercasing differs between the two: Arrow's
-``utf8_lower`` (like the DuckDB oracle and Lucene's LowerCaseFilter) lowers
-each code point on its own, Spark's ``lower`` applies Java's full case
-mapping (ARCHITECTURE "Known divergences").
+Index rendering (bottom of the module): the catalog serves searches, GETs
+and counts from a ``SearchIndex`` of its latest version
+(``DatasetsCatalog.snapshot``): the version's ``pyarrow.Table``, its
+``utf8_lower``ed titles, token → row postings of the lowered ``dataSample``
+(split on ``analyzers.STANDARD_SPLIT``) and ``sourceUri`` (split on
+``URI_SPLIT``, stopwords dropped), and an id → row map, all built once per
+version.  ``search`` and ``count`` dispatch on the source they get: a
+DataFrame runs the Spark plan, an index is answered in the driver with no
+Spark job.
+
+Why the postings give the regex clauses' answer: the oracle and the Spark
+plan match ``dataSample``/``sourceUri`` with
+``analyzers.token_match_pattern``, a regex that matches a lowered string
+exactly when the string's token set (split on the same class) intersects
+the query's tokens.  The postings hold each row's token set of the same
+lowered string split on the same class, so the rows listed under the
+query's tokens are the rows the regex matches — a repeated token lists its
+row once, a null or empty cell lists nowhere.  The title clause stays a
+substring test, over the lowered titles.  A text search therefore scores
+every row by adding the boosts of the clauses it matches (title 3,
+dataSample 2, sourceUri 1: the sums are exact), keeps the rows that score,
+and runs the filters, facets, post-filters and the (score desc, id asc)
+top-k on those candidate rows only.  A match-all search or count masks
+the whole table with the filters.  Pinned against the DuckDB oracle by
+``tests/test_search.py`` (``test_index_matches_regex_at_token_boundaries``
+and the ``test_arrow_*`` tests).
+
+Lowercasing differs between the renderers: Arrow's ``utf8_lower`` (like
+the DuckDB oracle and Lucene's LowerCaseFilter) and the query side's
+``analyzers.fold_case`` lower each code point on its own, Spark's
+``lower`` applies Java's full case mapping (ARCHITECTURE "Known
+divergences").
 """
 
 from __future__ import annotations
 
+import bisect
 from dataclasses import dataclass
 
 import numpy as np
@@ -92,24 +116,17 @@ def text_clause_columns(text: str) -> list[tuple[Column, float]]:
     """The 3 boosted text clauses (T1-T3) as Columns — same patterns as the
     oracle renderer (analyzers.token_match_pattern is shared)."""
     clauses: list[tuple[Column, float]] = [
-        (F.lower(F.col("title")).contains(text.lower()), TITLE_BOOST)
+        (F.lower(F.col("title")).contains(analyzers.fold_case(text)), TITLE_BOOST)
     ]
-    std, uri = _token_patterns(text)
+    std = analyzers.token_match_pattern(
+        analyzers.standard_tokens(text), analyzers.STANDARD_SPLIT
+    )
+    uri = analyzers.token_match_pattern(analyzers.uri_tokens(text), analyzers.URI_SPLIT)
     if std:
         clauses.append((F.lower(F.col("dataSample")).rlike(std), DATASAMPLE_BOOST))
     if uri:
         clauses.append((F.lower(F.col("sourceUri")).rlike(uri), SOURCEURI_BOOST))
     return clauses
-
-
-def _token_patterns(text: str) -> tuple[str | None, str | None]:
-    """The dataSample (standard analyzer) and sourceUri (uri_analyzer)
-    token-match patterns of a query text; None where it has no token."""
-    std = analyzers.token_match_pattern(
-        analyzers.standard_tokens(text), analyzers.STANDARD_SPLIT
-    )
-    uri = analyzers.token_match_pattern(analyzers.uri_tokens(text), analyzers.URI_SPLIT)
-    return std, uri
 
 
 def _clauses(cq: CompiledQuery, clauses=None) -> list[tuple[Column, float]]:
@@ -359,17 +376,17 @@ class SearchResult:
     formats: list[str]
 
 
-def search(src: DataFrame | pa.Table, cq: CompiledQuery) -> SearchResult:
-    """Full faceted search over a DataFrame or the catalog's Arrow snapshot.
+def search(src: DataFrame | SearchIndex, cq: CompiledQuery) -> SearchResult:
+    """Full faceted search over a DataFrame or the catalog's search index.
 
-    A ``pyarrow.Table`` is answered in the driver by ``arrow_search``, with
+    A ``SearchIndex`` is answered in the driver by ``arrow_search``, with
     no Spark job.  A DataFrame runs the Spark plan, the one driver-side
     collect point (final page + facet keys + count only; never the full
     match set): the ranked hits page is one job, and the one-pass
     facets+total aggregation is two more, because its grouping-sets
     ``Expand`` forces an Exchange.  Both plans share one query-filtered
     frame (its Column tree is built once)."""
-    if isinstance(src, pa.Table):
+    if isinstance(src, SearchIndex):
         return arrow_search(src, cq)
     df = src
     clauses = _clauses(cq)
@@ -381,11 +398,11 @@ def search(src: DataFrame | pa.Table, cq: CompiledQuery) -> SearchResult:
     return SearchResult(hits=hit_rows, total=n, categories=cats, formats=fmts)
 
 
-def count(src: DataFrame | pa.Table, cq: CompiledQuery) -> int:
+def count(src: DataFrame | SearchIndex, cq: CompiledQuery) -> int:
     """Rows in the query context (security + query filters + text match),
     the count endpoint's answer; dispatches like ``search``."""
-    if isinstance(src, pa.Table):
-        return arrow_query_filtered(src, cq)[0].num_rows
+    if isinstance(src, SearchIndex):
+        return arrow_count(src, cq)
     return query_filtered(src, cq).count()
 
 
@@ -418,11 +435,102 @@ def create_secure_view(
     return secured
 
 
-# -- Arrow rendering: the served snapshot -----------------------------------
+# -- Index rendering: the served snapshot ----------------------------------
 #
-# Masks are boolean arrays over the table; a comparison with a null reads
-# as false.  The predicates are monotone (AND/OR, no NOT), so that keeps
+# Masks are boolean arrays over a table; a comparison with a null reads as
+# false.  The predicates are monotone (AND/OR, no NOT), so that keeps
 # exactly the rows Spark's and SQL's three-valued WHERE keeps.
+
+
+@dataclass(frozen=True)
+class Postings:
+    """Token → ascending row positions, in CSR form: the rows holding the
+    ``k``-th token are ``rows[starts[k]:starts[k + 1]]``, ``k = vocab[t]``."""
+
+    vocab: dict[str, int]
+    starts: np.ndarray
+    rows: np.ndarray
+
+    @classmethod
+    def build(cls, lowered, split: str, stopwords=frozenset()) -> Postings:
+        """Postings of a lowered string column split on the ``split``
+        regex, without the empty token and ``stopwords``.  Sort-based: each
+        (token id, row) pair of every cell is one int64 key, sorted and
+        deduplicated by ``np.unique`` (a token repeated in a cell lists
+        the row once), so the only Python objects are the distinct
+        tokens."""
+        parts = pc.split_pattern_regex(lowered, split)
+        encoded = pc.dictionary_encode(pc.list_flatten(parts))
+        vocab = encoded.dictionary.to_pylist()
+        dropped = np.array([not t or t in stopwords for t in vocab], bool)
+        ids = encoded.indices.to_numpy()
+        n = len(lowered)
+        keys = ids.astype(np.int64)
+        keys *= n
+        keys += pc.list_parent_indices(parts).to_numpy()
+        keys = np.unique(keys[~dropped[ids]])
+        rows = (keys % n).astype(np.int32)
+        keys //= n
+        return cls(
+            vocab={t: k for k, t in enumerate(vocab)},
+            starts=np.searchsorted(keys, np.arange(len(vocab) + 1)),
+            rows=rows,
+        )
+
+    def mark(self, hit: np.ndarray, tokens) -> np.ndarray:
+        """Set ``hit`` at the rows holding any of ``tokens``."""
+        for t in tokens:
+            k = self.vocab.get(t)
+            if k is not None:
+                hit[self.rows[self.starts[k]:self.starts[k + 1]]] = True
+        return hit
+
+
+@dataclass(frozen=True)
+class SearchIndex:
+    """What served reads query: one version's table, its lowered titles,
+    the ``dataSample`` and ``sourceUri`` postings, and an id → row map:
+    the rows in id order (``rows_by_id``), searched by bisection — 4 bytes
+    an entry, where a dict of Python strings costs about 170."""
+
+    table: pa.Table
+    title: pa.Array
+    data_sample: Postings
+    source_uri: Postings
+    rows_by_id: np.ndarray
+
+    @classmethod
+    def build(cls, table: pa.Table) -> SearchIndex:
+        table = table.combine_chunks()
+
+        def lowered(name):
+            return pc.utf8_lower(table[name]).combine_chunks()
+
+        return cls(
+            table=table,
+            title=lowered("title"),
+            data_sample=Postings.build(lowered("dataSample"), analyzers.STANDARD_SPLIT),
+            source_uri=Postings.build(
+                lowered("sourceUri"), analyzers.URI_SPLIT, analyzers.URI_STOPWORDS
+            ),
+            # stable: equal ids keep their row order
+            rows_by_id=pc.sort_indices(table["id"]).to_numpy().astype(np.int32),
+        )
+
+    @property
+    def num_rows(self) -> int:
+        return self.table.num_rows
+
+    def row(self, entry_id: str) -> dict | None:
+        """The (first) entry with ``entry_id`` as a dict, or None.  Arrow
+        orders strings by their UTF-8 bytes, which is Python's code-point
+        order, so the bisection agrees with the sort."""
+        ids, order = self.table["id"], self.rows_by_id
+        k = bisect.bisect_left(range(len(order)), entry_id,
+                               key=lambda i: ids[order[i]].as_py())
+        if k == len(order) or ids[order[k]].as_py() != entry_id:
+            return None
+        return self.table.slice(order[k], 1).to_pylist()[0]
 
 
 def _all_of(masks):
@@ -459,49 +567,54 @@ def predicate_mask(table: pa.Table, f):
     raise TypeError(f"unknown filter {f!r}")
 
 
-def text_clause_masks(table: pa.Table, text: str) -> list:
-    """The 3 boosted text clauses as (mask, boost) — text_clause_columns'
-    twin: ``utf8_lower`` + ``match_substring`` for the title,
-    ``match_substring_regex`` (RE2, like the oracle) for the token
-    patterns."""
-    clauses = [
-        (pc.match_substring(pc.utf8_lower(table["title"]), text.lower()), TITLE_BOOST)
-    ]
-    std, uri = _token_patterns(text)
-    if std:
-        clauses.append(
-            (pc.match_substring_regex(pc.utf8_lower(table["dataSample"]), std),
-             DATASAMPLE_BOOST)
-        )
-    if uri:
-        clauses.append(
-            (pc.match_substring_regex(pc.utf8_lower(table["sourceUri"]), uri),
-             SOURCEURI_BOOST)
-        )
-    return [(pc.fill_null(m, False), boost) for m, boost in clauses]
+def text_scores(index: SearchIndex, text: str) -> np.ndarray:
+    """Every row's relevance score for ``text`` (score_column's twin): the
+    boosts of the clauses it matches, added in clause order; 0 where none
+    matches.  The title clause is a substring test of the folded text in
+    the lowered titles; the dataSample and sourceUri clauses read the
+    postings of the text's tokens."""
+    title = pc.match_substring(index.title, analyzers.fold_case(text))
+    score = pc.fill_null(title, False).to_numpy(zero_copy_only=False) * TITLE_BOOST
+    for postings, tokens, boost in (
+        (index.data_sample, analyzers.standard_tokens(text), DATASAMPLE_BOOST),
+        (index.source_uri, analyzers.uri_tokens(text), SOURCEURI_BOOST),
+    ):
+        score += postings.mark(np.zeros(index.num_rows, bool), tokens) * boost
+    return score
 
 
-def arrow_query_filtered(table: pa.Table, cq: CompiledQuery):
-    """(rows, score): the query-context rows of ``table`` (query_filtered's
-    twin) and their relevance scores (score_column's twin).  The filters
-    run first, so the text clauses only see rows the filters keep."""
+def arrow_query_filtered(index: SearchIndex, cq: CompiledQuery):
+    """(rows, score): the query-context rows (query_filtered's twin) and
+    their relevance scores.  A text query takes the rows that score, then
+    filters them; a match-all query masks the whole table."""
+    table = index.table
+    if cq.text:
+        score = text_scores(index, cq.text)
+        hit = np.flatnonzero(score)
+        table, score = table.take(hit), score[hit]
+    else:
+        score = np.ones(table.num_rows)
     keep = _all_of(predicate_mask(table, f) for f in cq.query_filters)
-    rows = table if keep is None else table.filter(keep)
-    if not cq.text:
-        return rows, pa.array(np.ones(rows.num_rows))
-    score, matched = None, None
-    for mask, boost in text_clause_masks(rows, cq.text):
-        part = pc.if_else(mask, boost, 0.0)
-        score = part if score is None else pc.add(score, part)
-        matched = mask if matched is None else pc.or_(matched, mask)
-    return rows.filter(matched), pc.filter(score, matched)
+    if keep is not None:
+        table = table.filter(keep)
+        score = score[keep.to_numpy(zero_copy_only=False)]
+    return table, pa.array(score)
 
 
-def arrow_search(table: pa.Table, cq: CompiledQuery) -> SearchResult:
-    """``search`` over an Arrow table: the hits page ranked (score desc, id
+def arrow_count(index: SearchIndex, cq: CompiledQuery) -> int:
+    """``count`` over the index: a match-all count is the true-count of
+    the filter mask, with no copy of the rows."""
+    if cq.text:
+        return arrow_query_filtered(index, cq)[0].num_rows
+    keep = _all_of(predicate_mask(index.table, f) for f in cq.query_filters)
+    return index.num_rows if keep is None else pc.sum(keep).as_py() or 0
+
+
+def arrow_search(index: SearchIndex, cq: CompiledQuery) -> SearchResult:
+    """``search`` over the index: the hits page ranked (score desc, id
     asc) with ``from`` or the ``searchAfter`` cursor, the total after the
     post-filters, and the facets over the pre-post-filter set."""
-    rows, score = arrow_query_filtered(table, cq)
+    rows, score = arrow_query_filtered(index, cq)
     cats = _arrow_facet(rows, "category", CATEGORIES_FACET_SIZE)
     fmts = _arrow_facet(rows, "format", FORMATS_FACET_SIZE)
     post = _all_of(predicate_mask(rows, f) for f in cq.post_filters)

@@ -3,7 +3,7 @@ reference's backing store (Elasticsearch) actually builds for its analyzed
 fields (data_catalog/configuration_const.py:21-84), re-expressed as a
 postings parquet table.
 
-The scan-based search path (search.py) evaluates the three text clauses as
+The Spark search path (search.py) evaluates the three text clauses as
 regex/contains over every visible row — correct, codegen'd, but O(corpus)
 per query.  This module is the scale path: a write-once postings table
 

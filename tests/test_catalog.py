@@ -596,7 +596,7 @@ def _ids(cat) -> set:
 
 
 def _served_ids(cat) -> set:
-    return set(cat.snapshot().column("id").to_pylist())
+    return set(cat.snapshot().table.column("id").to_pylist())
 
 
 def _persistent_rdds(spark) -> int:
@@ -616,13 +616,13 @@ def _stream_batch(spark, entry_id: str):
 def test_pinned_reads_see_every_write(spark, tmp_path):
     """Read-your-writes through the serving snapshot after each kind of
     commit: served ids, GET and count agree with the union of scans."""
-    import pyarrow as pa
+    from data_catalog_spark.search import SearchIndex
 
     cat = DatasetsCatalog(spark, str(tmp_path / "ryw"))
     cat.upsert("a", ENTRY)
     assert _served_ids(cat) == {"a"} == _ids(cat)
-    assert isinstance(cat.snapshot(), pa.Table)
-    assert cat.snapshot() is cat.snapshot()  # one table per version
+    assert isinstance(cat.snapshot(), SearchIndex)
+    assert cat.snapshot() is cat.snapshot()  # one index per version
 
     cat.partial_update("a", {"title": "patched"})
     assert cat.get("a")["title"] == "patched"
@@ -639,10 +639,10 @@ def test_pinned_reads_see_every_write(spark, tmp_path):
     assert _served_ids(cat) == {"a", "c", "d"} == _ids(cat)
     assert cat.count() == 3
 
-    before = {r["id"]: r for r in cat.snapshot().to_pylist()}
+    before = {r["id"]: r for r in cat.snapshot().table.to_pylist()}
     rep = cat.compact(max_files_per_cell=0)
     assert rep["version"] == cat._latest_version()
-    assert {r["id"]: r for r in cat.snapshot().to_pylist()} == before
+    assert {r["id"]: r for r in cat.snapshot().table.to_pylist()} == before
     assert {r.id: r.asDict() for r in cat.df().collect()} == before
     assert cat._slot.key[0] == rep["version"]
 
@@ -653,7 +653,7 @@ def test_second_instance_sees_commit_on_next_read(spark, tmp_path):
     b = DatasetsCatalog(spark, path)
     a.upsert("x", ENTRY)
     assert _served_ids(b) == {"x"}
-    assert b._slot.table is not None
+    assert b._slot.index is not None
     a.upsert("y", ENTRY)
     assert _served_ids(b) == {"x", "y"}
     a.delete("x")
@@ -674,9 +674,9 @@ def test_drop_and_recreate_to_same_version_serves_new_rows(spark, tmp_path):
     v = a._latest_version()
     for cat in (a, b):  # both instances hold the old table
         assert _served_ids(cat) == {"old"}
-        assert cat._slot.table is not None
+        assert cat._slot.index is not None
     a.drop()
-    assert a._slot.key is None and a._slot.table is None  # drop empties the slot
+    assert a._slot.key is None and a._slot.index is None  # drop empties the slot
     a.upsert("new", {**ENTRY, "title": "rebuilt"})
     assert a._latest_version() == v
     for cat in (a, b):
@@ -785,13 +785,70 @@ def test_df_is_the_union_of_scans_for_every_read(spark, tmp_path):
     cat = DatasetsCatalog(spark, path)
     first = cat.df()
     assert "InMemoryRelation" not in _plan(first) and "Union" in _plan(first)
-    assert cat._slot.table is None
+    assert cat._slot.index is None
     served = cat.snapshot()
     second = cat.df()
     assert "InMemoryRelation" not in _plan(second) and "Union" in _plan(second)
     assert sorted(map(tuple, first.collect())) == sorted(
-        tuple(r.values()) for r in served.to_pylist()
+        tuple(r.values()) for r in served.table.to_pylist()
     )
+
+
+def test_served_reads_do_no_per_query_scan(spark, tmp_path, monkeypatch):
+    """Once a version's index is built, a served text search, count and GET
+    run no Spark job and call no ``utf8_lower``, ``match_substring_regex``
+    or ``filter`` (``Table.filter`` calls it) over the whole snapshot: the
+    text clauses read the postings and the lowered titles, the filters see
+    only the candidate rows, a count is the true-count of the filter mask
+    and a GET an id lookup.  A match-all search keeps the mask path, which
+    shows the spies see a full-snapshot ``filter``."""
+    import pyarrow.compute as pc
+
+    from data_catalog_spark.query import DataSetFiltering
+    from data_catalog_spark.service import DataCatalogService
+
+    words = ["amber", "birch", "cedar", "delta", "ember", "fjord", "grove", "heath"]
+    svc = DataCatalogService(DatasetsCatalog(spark, str(tmp_path / "guard")))
+    svc.catalog.bulk_upsert([
+        (f"e{i:02d}", {**ENTRY, "title": f"{words[i % 8]} {words[(i + 3) % 8]}",
+                       "dataSample": f"id,{words[(i + 1) % 8]}",
+                       "sourceUri": f"http://www.example.com/{words[(i + 2) % 8]}",
+                       "format": ["csv", "json"][i % 2], "isPublic": i % 3 == 0,
+                       "orgUUID": f"org0{i % 3 + 1}"})
+        for i in range(48)
+    ])
+    n = svc.catalog.snapshot().num_rows  # built here, before the spies
+    mode = DataSetFiltering.PRIVATE_AND_PUBLIC
+    calls = []
+
+    def spy(name, real):
+        def call(arg, *args, **kw):
+            calls.append((name, len(arg)))
+            return real(arg, *args, **kw)
+        return call
+
+    for name in ("utf8_lower", "match_substring_regex", "filter"):
+        monkeypatch.setattr(pc, name, spy(name, getattr(pc, name)))
+    sc = spark.sparkContext
+    sc.setJobGroup("served-reads", "served reads")
+    try:
+        for q in [{"query": "amber"}, {"query": "cedar grove", "from": 2, "size": 3},
+                  {"query": "ember", "filters": [{"format": ["JSON"]},
+                                                 {"category": ["health"]}]},
+                  {"query": "birch", "searchAfter": [3.0, "e05"]}]:
+            body, status = svc.search(q, ["org01"], mode)
+            assert status == 200 and body["total"] > 0, q
+        assert svc.count(["org02"], mode)[0]["total"] == 32
+        assert svc.get_entry("e07", [], True)[0]["title"] == "heath cedar"
+        assert svc.get_entry("nope", [], True) == (None, 404)
+        assert svc.catalog.count() == n
+        assert calls and all(k < n for _, k in calls), calls
+        assert sc.statusTracker().getJobIdsForGroup("served-reads") == []
+        svc.search({}, ["org01"], mode)
+        assert ("filter", n) in calls
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_pin_is_size_checked(spark, tmp_path, monkeypatch):
@@ -817,7 +874,7 @@ def test_pin_is_size_checked(spark, tmp_path, monkeypatch):
 
     served = DataCatalogService(DatasetsCatalog(spark, path))
     want = answers(served)
-    assert served.catalog._slot.table is not None
+    assert served.catalog._slot.index is not None
     monkeypatch.setattr(DatasetsCatalog, "PIN_MAX_BYTES", -1)
     unpinned = DataCatalogService(DatasetsCatalog(spark, path))
     got = answers(unpinned)

@@ -387,12 +387,12 @@ def test_more_like_this_excludes_seed_and_requires_overlap(spark, sf_dir):
         assert r.score > 0
 
 
-# -- Arrow renderer (the served snapshot) vs the DuckDB oracle --------------
+# -- Index renderer (the served snapshot) vs the DuckDB oracle --------------
 
 
 @pytest.fixture(scope="module")
 def ds_arrow(ds):
-    return ds.toArrow()
+    return search.SearchIndex.build(ds.toArrow())
 
 
 def _result(res) -> dict:
@@ -516,7 +516,7 @@ def mixed(spark):
     table = df.toArrow()
     con = duckdb.connect()
     con.register("datasets", table)
-    yield df, table, con
+    yield df, search.SearchIndex.build(table), con
     con.close()
 
 
@@ -571,3 +571,65 @@ def test_arrow_spark_and_oracle_agree(mixed, query, scope):
     assert _result(search.search(table, cq)) == want
     assert _result(search.search(df, cq)) == want
     assert search.count(table, cq) == search.count(df, cq)
+
+
+# -- the index's postings answer the regex clauses at token boundaries ------
+
+# (title, dataSample, sourceUri): digits next to letters (the URI split
+# treats them as separators, the standard split does not), non-ASCII
+# letters (separators for both), URI stopwords, a token repeated in one
+# cell, and empty or null cells.
+_BOUNDARY_TEXT = [
+    ("abc123def report", "id,abc123def", "http://www.abc123def.com/x1y"),
+    ("caféwidget", "caféwidget,straße", "http://shop.example/caféwidget/straße"),
+    ("Straße Map", "STRASSE,Widget", "ftp://files.org/widget9widget"),
+    ("repeat", "widget,widget,WIDGET", "https://com.www/widget/widget"),
+    ("", "", ""),
+    (None, None, None),
+    ("http www", "www.http.com", None),
+    ("plain abc", "def,123", "https://abc.example.com/def"),
+    ("e x", "e,x", "http://e.x/"),
+]
+
+
+def _boundary_index():
+    import pyarrow as pa
+
+    rows = [
+        {"id": f"b{i}", "title": t, "category": f"cat{i % 3}", "dataSample": d,
+         "format": ["csv", "json"][i % 2], "recordCount": i, "size": 10 * i,
+         "sourceUri": u, "targetUri": f"hdfs://nn:8200/b/{i}/000000_1",
+         "storeType": None, "isPublic": i % 2 == 0, "orgUUID": f"org0{i % 2 + 1}",
+         "creationTime": "2015-01-01T00:00:00"}
+        for i, (t, d, u) in enumerate(_BOUNDARY_TEXT)
+    ]
+    return pa.Table.from_pylist(rows)
+
+
+@pytest.mark.parametrize("scope", [
+    ([], M.PRIVATE_AND_PUBLIC, True),
+    (["org02"], M.PRIVATE_AND_PUBLIC, False),
+])
+def test_index_matches_regex_at_token_boundaries(scope):
+    """The postings path equals the oracle's regex clauses (``sqlgen``,
+    DuckDB) on full hit rows with score, total and facets, where token
+    boundaries are easy to get wrong."""
+    import duckdb
+
+    table = _boundary_index()
+    index = search.SearchIndex.build(table)
+    con = duckdb.connect()
+    con.register("datasets", table)
+    texts = ["abc", "def", "abc123def", "123", "x1y", "caféwidget", "café", "caf",
+             "widget", "WIDGET widget", "straße", "STRASSE", "stra", "e", "http",
+             "www", "com", "http://www.abc123def.com", "repeat", "nomatch", "9"]
+    scores = set()
+    for text in texts:
+        cq = compile_query({"query": text, "size": 20}, *scope)
+        want = _oracle(con, cq, prelude="")
+        assert _result(search.search(index, cq)) == want, text
+        assert search.count(index, cq) == want["total"], text
+        scores |= {h["score"] for h in want["hits"]}
+    con.close()
+    # every clause, alone and in sum, decided some hit
+    assert {1.0, 2.0, 3.0} <= scores and len(scores) >= 5
