@@ -19,7 +19,10 @@ is the entry's contract is declared by INDEX_SERVE below: lanes whose
 semantics serve from or maintain a persisted/once-per-corpus index
 artifact are steady-contract (run 1 measures the artifact build the lane
 exists to amortize); everything else is batch analytics, where cold is
-the honest cost of the computation.  ``queries``/``value`` keep the
+the honest cost of the computation.  Each entry also records the memo
+store's builds and hits during run 1 (``memo_run1``, from
+``session_cache.stats``), so a cold number that was really a memo read
+shows it.  ``queries``/``value`` keep the
 historical best-of methodology unchanged for round-over-round
 comparability; the cold/steady split rides alongside (``cold_total_sec``
 / ``steady_total_sec`` on the final line, full dicts in the detail line
@@ -220,7 +223,6 @@ INDEX_SERVE = {
     "stream_ann_pq_serve",
     "stream_cluster_maintenance",
     "media_phash_reload",
-    "kmeans_train",
 }
 
 
@@ -289,6 +291,47 @@ def split_cold_steady(
     return cold, steady
 
 
+def memo_delta(before: dict, after: dict) -> dict:
+    """Builds and hits of the memo store between two
+    ``session_cache.stats()`` snapshots: the totals plus the tags that
+    moved."""
+    tags = {}
+    for tag, now in after.items():
+        was = before.get(tag, {"builds": 0, "hits": 0})
+        moved = {k: now[k] - was[k] for k in ("builds", "hits")}
+        if any(moved.values()):
+            tags[tag] = moved
+    return {
+        "builds": sum(t["builds"] for t in tags.values()),
+        "hits": sum(t["hits"] for t in tags.values()),
+        "tags": tags,
+    }
+
+
+def runs_record(
+    spreads: dict[str, list[float]],
+    loads: dict[str, list[float]],
+    suspects: list[str],
+    memo_run1: dict[str, dict],
+    sf: float | None,
+    load: dict,
+) -> dict:
+    """The BENCH_RUNS.json record: per entry its runs, loadavg samples,
+    cold/steady split and run-1 memo builds/hits."""
+    cold, steady = split_cold_steady(spreads)
+    return {
+        "runs": spreads,
+        "loads": loads,
+        "suspects": suspects,
+        "cold": cold,
+        "steady": steady,
+        "memo_run1": memo_run1,
+        "index_serve_lanes": sorted(INDEX_SERVE),
+        "sf": sf,
+        **load,
+    }
+
+
 def headline_line(
     timings: dict[str, float],
     sf: float | None,
@@ -341,6 +384,7 @@ def headline_line(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from data_catalog_spark.operators.session_cache import stats
     from data_catalog_spark.session import get_spark
     import __spark_entry__ as e
 
@@ -361,6 +405,7 @@ def main() -> None:
     spreads: dict[str, list[float]] = {}
     loads: dict[str, list[float]] = {}
     suspects: list[str] = []
+    memo_run1: dict[str, dict] = {}
     for name in names:
         runs: list[float] = []
         lavg: list[float] = []
@@ -371,8 +416,10 @@ def main() -> None:
             qs[name](spark, sf_dir).collect()
             runs.append(round(time.time() - t0, 3))
 
-        for _ in range(2):
-            timed_run()
+        memo_before = stats()
+        timed_run()
+        memo_run1[name] = memo_delta(memo_before, stats())
+        timed_run()
         if is_load_suspect(runs):
             # one retry: a burst that hit one of the first two runs gets a
             # third chance at a quiet window.  The recorded verdict then
@@ -389,7 +436,8 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
     load = load_evidence(load_before, os.getloadavg()[0])
-    cold, steady = split_cold_steady(spreads)
+    record = runs_record(spreads, loads, suspects, memo_run1, sf, load)
+    cold, steady = record["cold"], record["steady"]
     # Per-run spread + per-query ambient loadavg samples go to a sidecar
     # file (box variance stays separable from regression) so the LAST
     # stdout line stays compact enough for the driver's tail capture —
@@ -399,19 +447,7 @@ def main() -> None:
             os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_RUNS.json"),
             "w",
         ) as fh:
-            json.dump(
-                {
-                    "runs": spreads,
-                    "loads": loads,
-                    "suspects": suspects,
-                    "cold": cold,
-                    "steady": steady,
-                    "index_serve_lanes": sorted(INDEX_SERVE),
-                    "sf": sf,
-                    **load,
-                },
-                fh,
-            )
+            json.dump(record, fh)
     except OSError:
         pass
     # Full per-query detail on its own line (NOT last — driver tail-captures

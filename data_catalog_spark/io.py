@@ -146,8 +146,10 @@ def process_scratch_table(df, tag: str):
     persist.py): the dir embeds this process's pid and is removed at
     interpreter exit, so no bench/oracle invocation can ever read state a
     previous run computed — derived-state sharing stays within one
-    process, the adjudicated memo discipline.  Callers key the returned
-    handle per (session, content) in their SessionLRU as before."""
+    process, the adjudicated memo discipline.  Callers memoize the
+    returned handle with ``session_cache.derived``; the frame carries its
+    directory (``_scratch_dir``), which the store removes when it
+    releases the entry."""
     import atexit
     import os
     import shutil
@@ -160,7 +162,9 @@ def process_scratch_table(df, tag: str):
         atexit.register(shutil.rmtree, _PROC_SCRATCH, ignore_errors=True)
     path = os.path.join(_PROC_SCRATCH, f"{tag}-{uuid.uuid4().hex[:12]}")
     df.write.parquet(path)
-    return df.sparkSession.read.parquet(path)
+    out = df.sparkSession.read.parquet(path)
+    out._scratch_dir = path
+    return out
 
 
 _PROC_SCRATCH = None

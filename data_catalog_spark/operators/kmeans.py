@@ -39,13 +39,12 @@ is part of the LLM-pipeline surface (IVF coarse-quantizer training).
 from __future__ import annotations
 
 import itertools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import register
-from .session_cache import SessionLRU
+from .session_cache import derived
 from .similarity import _emb
 
 K_TRAIN = 8
@@ -53,20 +52,6 @@ TRAIN_ITERS = 4
 _DIM = 64
 _Q = 1_000_000.0  # microunit fixed-point quantum
 
-# Trained model state (coarse centroids, PQ codebooks) memoized per
-# (Spark application, corpus content stat) — the driver-side twin of
-# io.materialization_path.  kmeans_train, ann_ivf_trained_topk and
-# ann_pq_trained_topk all consume the embeddings corpus: within one
-# process each model trains ONCE and every consumer (and every bench
-# re-run) reuses it; a regenerated embeddings.parquet (new mtime/size)
-# retrains.  Models are plain python floats, so a cache hit never
-# resurrects executor state from a stopped session and the dict can stay
-# unbounded.  The shared embeddings CHECKPOINT is different — its
-# DataFrame pins its session — so it lives in a session-LRU store
-# (session_cache.SessionLRU) that releases discarded newSession()
-# siblings instead of leaking them (r9 ADVICE).
-_MODEL_CACHE: dict[tuple, object] = {}
-_EMB_CACHE = SessionLRU()
 _VIEW_SEQ = itertools.count()
 
 
@@ -79,47 +64,31 @@ def _uview(df: DataFrame, prefix: str) -> str:
     return name
 
 
-def _corpus_key(spark: SparkSession, sf_dir: str, kind: str) -> tuple:
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    return (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        st.st_mtime_ns,
-        st.st_size,
-        kind,
-    )
-
-
 def _shared_emb(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
     """The (vec_id, v) embeddings frame behind one lazy localCheckpoint,
     plus its registered view name — shared by the training surfaces.
+    Session-scoped like every ``derived`` value: temp views live in a
+    session's catalog, so a sibling ``spark.newSession()`` builds (and
+    registers) its own entry."""
 
-    Keyed on the SESSION too, not just the application: temp views live
-    in a session's catalog, so a sibling ``spark.newSession()`` of the
-    same app must build (and register) its own entry or every consumer
-    of the cached view name hits TABLE_OR_VIEW_NOT_FOUND.  ``id(spark)``
-    cannot alias a dead session here because the cached DataFrame keeps
-    a strong reference to its session for the life of the entry.  The
-    trained-model caches (plain python floats) stay app-keyed — floats
-    are session-free, and on a miss they train through this
-    session-scoped view."""
-    key = _corpus_key(spark, sf_dir, "emb")
-    hit = _EMB_CACHE.get(id(spark), key)
-    if hit is None:
+    def build() -> tuple[DataFrame, str]:
         e = _emb(spark, sf_dir).localCheckpoint(eager=False)
-        hit = (e, _uview(e, "__km_e"))
-        _EMB_CACHE.put(id(spark), key, hit)
-    return hit
+        return e, _uview(e, "__km_e")
+
+    return derived(spark, sf_dir, "embeddings", "km-emb", build)
 
 
 def _trained_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """The coarse k=8 Lloyd model over the embeddings corpus, trained once
-    per corpus content and shared by kmeans_train + ann_ivf_trained_topk."""
-    key = _corpus_key(spark, sf_dir, "coarse")
-    if key not in _MODEL_CACHE:
-        _, view = _shared_emb(spark, sf_dir)
-        _MODEL_CACHE[key] = _lloyd_centroids(spark, view)
-    return _MODEL_CACHE[key]  # type: ignore[return-value]
+    per corpus content and session, and shared by kmeans_train +
+    ann_ivf_trained_topk; a regenerated embeddings.parquet retrains."""
+    return derived(
+        spark,
+        sf_dir,
+        "embeddings",
+        "km-coarse",
+        lambda: _lloyd_centroids(spark, _shared_emb(spark, sf_dir)[1]),
+    )
 
 
 def _micro_sum(col: str) -> F.Column:
@@ -424,12 +393,11 @@ FROM s GROUP BY m, j, pos
 def _trained_codebooks(
     spark: SparkSession, sf_dir: str
 ) -> list[list[list[float]]]:
-    """Per-subspace PQ codebooks, trained once per corpus content (same
-    memoization contract as ``_trained_centroids``)."""
+    """Per-subspace PQ codebooks, trained once per corpus content and
+    session (as ``_trained_centroids``)."""
     from .similarity import N_QUERIES, PQ_M, _with_norm
 
-    key = _corpus_key(spark, sf_dir, "pq_books")
-    if key not in _MODEL_CACHE:
+    def train() -> list[list[list[float]]]:
         sub = _DIM // PQ_M
         e0, _ = _shared_emb(spark, sf_dir)
         corpus = (
@@ -450,8 +418,9 @@ SELECT vec_id, s.m AS m, s.sv AS sv FROM (
 """
         ).localCheckpoint(eager=False)
         sl_view = _uview(sl, "__pq_sl")
-        _MODEL_CACHE[key] = _pq_codebooks_micro(spark, corpus_view, sl_view)
-    return _MODEL_CACHE[key]  # type: ignore[return-value]
+        return _pq_codebooks_micro(spark, corpus_view, sl_view)
+
+    return derived(spark, sf_dir, "embeddings", "km-pq-books", train)
 
 
 def ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2,7 +2,7 @@
 
 r10 verdict ask #4: every expensive derived artifact (PQ coded corpus,
 MinHash cluster labels, kmeans centroids, LSH code tables) was memoized
-per session (`SessionLRU`) — correct within a process, but a NEW process
+per session (`session_cache.derived`) — correct within a process, but a NEW process
 (deployment restart, the driver's next gate run) pays the full rebuild.
 This module is the gap between "memoized" and "an index": save the
 artifact to parquet next to a content key, and any later session — same
@@ -11,7 +11,7 @@ by the key, never by wall-clock.
 
 Key design: the key hashes (a) the SOURCE content identity — abspath +
 st_mtime_ns + st_size of every input file, the same identity the
-SessionLRU memos already use (corpus.py / similarity.py) — and (b) the
+in-process memo store keys on (session_cache.derived) — and (b) the
 MODEL identity — a repr-hash of the frozen codebooks/params plus a format
 version.  Either changing ⇒ different key ⇒ the stale artifact is simply
 never read (content-addressed paths make invalidation a no-op).

@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 
 from ..io import read_table
 from .registry import register
-from .session_cache import SessionLRU
+from .session_cache import derived
 
 TOP_K = 10
 N_QUERIES = 8  # vec_id < 8 are the query vectors
@@ -337,34 +337,14 @@ def _band_bits(df: DataFrame, planes: np.ndarray) -> DataFrame:
     return df.select("vec_id", "v", "nrm").mapInPandas(run, schema=_CODES_SCHEMA)
 
 
-# The coded corpus IS the sign-LSH index: frozen seeded planes over fixed
-# content give a deterministic code table, so build it once per (Spark
-# application, corpus content stat) and let every probe reuse it — the
-# same memoization contract as the trained quantizers (kmeans._MODEL_CACHE)
-# and the content-keyed text index.  The first invocation still builds it
-# (the gate's one-shot run measures build+probe); repeat runs measure the
-# probe path, which is what an LSH index deployment pays per batch.
-# Session-LRU, not a plain dict: each cached plan pins its session, so
-# session churn must evict, not accumulate (r9 ADVICE; kmeans._EMB_CACHE
-# rationale).
-_CODED_CACHE = SessionLRU()
-
-
 def _pair_coded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    """The coded corpus IS the sign-LSH index: frozen seeded planes over
+    fixed content give a deterministic code table, built once per corpus
+    and reused by every probe.  The first invocation still builds it (the
+    gate's one-shot run measures build+probe); repeat runs measure the
+    probe path, which is what an LSH index deployment pays per batch."""
 
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    # keyed on the SESSION as well as the app: the cached plan is bound
-    # to its session (kmeans._shared_emb rationale); id(spark) cannot
-    # alias a dead session while the cached DataFrame pins it alive
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        st.st_mtime_ns,
-        st.st_size,
-    )
-    hit = _CODED_CACHE.get(id(spark), key)
-    if hit is None:
+    def build() -> DataFrame:
         # the embeddings file is a single row group ⇒ a 1-task scan would
         # serialize all 128 plane dots per vector; spread vectors across
         # the executor threads first (a no-op on a properly partitioned
@@ -372,11 +352,11 @@ def _pair_coded(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = _emb(spark, sf_dir).repartition(
             spark.sparkContext.defaultParallelism, "vec_id"
         )
-        hit = _band_bits(_with_norm(emb), _pair_planes()).localCheckpoint(
+        return _band_bits(_with_norm(emb), _pair_planes()).localCheckpoint(
             eager=False
         )
-        _CODED_CACHE.put(id(spark), key, hit)
-    return hit
+
+    return derived(spark, sf_dir, "embeddings", "lsh-coded", build)
 
 
 _PAIR_DOT_SCHEMA = "va bigint, vb bigint, dot double, na double, nb double"
@@ -467,33 +447,21 @@ def _arrow_pair_cos(cand: DataFrame, a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
-# the scored embedding near-dup pair frame memoized per (session,
-# embeddings content) — consumed by the entry, the emb_lsh recall-
-# contract lane, and embedding_dup_clusters (the _derived contract)
-_EMB_PAIRS_CACHE = SessionLRU()
-
-
 def _emb_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    """The scored embedding near-dup pair frame, memoized per corpus and
+    written as a scratch table — consumed by the emb_lsh recall-contract
+    lane and embedding_dup_clusters."""
+    from ..io import process_scratch_table
 
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        st.st_mtime_ns,
-        st.st_size,
-    )
-    hit = _EMB_PAIRS_CACHE.get(id(spark), key)
-    if hit is None:
-        # written table, not a localCheckpoint (io.process_scratch_table
-        # rationale — derived corpus state must not pin executor storage)
-        from ..io import process_scratch_table
-
-        hit = process_scratch_table(
+    return derived(
+        spark,
+        sf_dir,
+        "embeddings",
+        "emb-lsh-pairs",
+        lambda: process_scratch_table(
             _emb_lsh_build(spark, sf_dir), "emb-lsh-pairs"
-        )
-        _EMB_PAIRS_CACHE.put(id(spark), key, hit)
-    return hit
+        ),
+    )
 
 
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -509,7 +477,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure cache reads).  Only the coded corpus (`_pair_coded` — the
     sign-LSH index itself, the r10-adjudicated code-table contract) is
     shared; the recall-contract and embedding_dup_clusters consumers
-    share one scored copy through `_emb_lsh_pairs`/_PAIR_CACHE."""
+    share one scored copy through `_emb_lsh_pairs`."""
     return _emb_lsh_build(spark, sf_dir).orderBy("va", "vb")
 
 
@@ -621,35 +589,21 @@ register("dedup_embedding_lsh", dedup_embedding_lsh, _pair_lsh_oracle())
 KNN_GRAPH_K = 5  # neighbors kept per node
 
 
-# the ranked edge set memoized per (session, embeddings content) — the
-# graph is derived curation state with two registered consumers
-# (knn_graph_lsh, knn_density_outliers); the _CLUSTER_CACHE / _pairs
-# contract: build once per corpus version per process, every consumer
-# reads the materialized edges
-_KNN_GRAPH_CACHE = SessionLRU()
-
-
 def _knn_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    """The ranked kNN edge set, memoized per corpus and written as a
+    scratch table: the graph is derived curation state with two
+    registered consumers (knn_graph_lsh, knn_density_outliers)."""
+    from ..io import process_scratch_table
 
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        st.st_mtime_ns,
-        st.st_size,
-    )
-    hit = _KNN_GRAPH_CACHE.get(id(spark), key)
-    if hit is None:
-        # written table, not a localCheckpoint (io.process_scratch_table
-        # rationale — derived corpus state must not pin executor storage)
-        from ..io import process_scratch_table
-
-        hit = process_scratch_table(
+    return derived(
+        spark,
+        sf_dir,
+        "embeddings",
+        "knn-edges",
+        lambda: process_scratch_table(
             _knn_graph_build(spark, sf_dir), "knn-edges"
-        )
-        _KNN_GRAPH_CACHE.put(id(spark), key, hit)
-    return hit
+        ),
+    )
 
 
 def knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1253,18 +1207,6 @@ def _pq_codebooks(spark: SparkSession, e: DataFrame) -> list[list[list[float]]]:
     return books
 
 
-# The coded corpus IS the PQ index — same contract as the sign-LSH
-# _CODED_CACHE above: frozen (or content-memoized trained) codebooks over
-# fixed content give a deterministic code table, built once per (app,
-# session, corpus content, codebook kind) and reused by every probe.
-# Before r10 every invocation re-ran the K×M-centroid coding fold over
-# the corpus (~2 s of the 2.4-2.8 s steady-state at sf0.1 — the r9
-# ann_pq_topk watch item; the code path itself was byte-identical to r8,
-# the isolated A/B showed no regression, but the rebuild made every run
-# pay index-build cost a deployment pays once).
-_PQ_CORPUS_CACHE = SessionLRU()
-
-
 def _pq_code_rows(rows: DataFrame, books) -> DataFrame:
     """Code the given normalized rows (vec_id, ..., vn) against ``books``:
     codes[m] = argmin_j ||slice_m − cb[m][j]||².  The per-subspace distance
@@ -1302,6 +1244,40 @@ def _pq_code_rows(rows: DataFrame, books) -> DataFrame:
     )
 
 
+def _unit_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # normalize first: on unit vectors L2² = 2 − 2·cos, so compressed-domain
+    # L2 ordering IS cosine ordering (without this, varying norms make ADC
+    # rank a different metric than the exact re-rank)
+    return _with_norm(_emb(spark, sf_dir)).withColumn(
+        "vn", F.expr("transform(v, x -> x / nrm)")
+    )
+
+
+def _pq_corpus(spark: SparkSession, sf_dir: str, books=None) -> DataFrame:
+    """The coded corpus IS the PQ index: frozen (``books`` None) or
+    content-memoized trained codebooks over fixed content give a
+    deterministic code table, built once per corpus and codebook kind and
+    reused by every probe.  Before r10 every invocation re-ran the
+    K×M-centroid coding fold over the corpus (~2 s of the 2.4-2.8 s
+    steady-state at sf0.1), so every run paid index-build cost a
+    deployment pays once.  Corpus coding (dists barrier + argmin) lives
+    in _pq_code_rows, shared with the incremental index append."""
+    tag = "pq-codes|trained"
+    if books is None:
+        from .ann_models import PQ_CODEBOOKS as books
+
+        tag = "pq-codes|frozen"
+    return derived(
+        spark,
+        sf_dir,
+        "embeddings",
+        tag,
+        lambda: _pq_code_rows(
+            _unit_emb(spark, sf_dir).where(F.col("vec_id") >= N_QUERIES), books
+        ),
+    )
+
+
 def _pq_parts(
     spark: SparkSession, sf_dir: str, books=None, codes: DataFrame | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -1314,39 +1290,10 @@ def _pq_parts(
     overrides the coded-corpus (vec_id, codes) relation — the persisted-
     index path (ann_pq_reload_topk) supplies the parquet-loaded code
     table here so the ADC scan runs off the reloaded artifact."""
-    kind = "pq-frozen"
+    corpus = codes if codes is not None else _pq_corpus(spark, sf_dir, books)
     if books is None:
         from .ann_models import PQ_CODEBOOKS as books
-    else:
-        # trained books are themselves memoized per corpus content
-        # (kmeans._MODEL_CACHE), so the kind tag is a stable cache key
-        kind = "pq-trained"
-
-    # normalize first: on unit vectors L2² = 2 − 2·cos, so compressed-domain
-    # L2 ordering IS cosine ordering (without this, varying norms make ADC
-    # rank a different metric than the exact re-rank)
-    e = _with_norm(_emb(spark, sf_dir)).withColumn(
-        "vn", F.expr("transform(v, x -> x / nrm)")
-    )
-    # corpus coding (dists barrier + argmin) lives in _pq_code_rows —
-    # shared with the incremental index append
-    import os as _os
-
-    st = _os.stat(_os.path.join(sf_dir, "embeddings.parquet"))
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        st.st_mtime_ns,
-        st.st_size,
-        kind,
-    )
-    if codes is not None:
-        corpus = codes
-    else:
-        corpus = _PQ_CORPUS_CACHE.get(id(spark), key)
-        if corpus is None:
-            corpus = _pq_code_rows(e.where(F.col("vec_id") >= N_QUERIES), books)
-            _PQ_CORPUS_CACHE.put(id(spark), key, corpus)
+    e = _unit_emb(spark, sf_dir)
     queries = e.where(F.col("vec_id") < N_QUERIES)
     return e, queries, _pq_pool_for(queries, corpus, books)
 
@@ -1451,7 +1398,7 @@ def _pq_exact_rerank(e, queries, pool) -> DataFrame:
 
 # -- persisted PQ index: restart-survivable reload parity ----------------------
 #
-# The memoized coded corpus above (_PQ_CORPUS_CACHE) dies with the Spark
+# The memoized coded corpus above (_pq_corpus) dies with the Spark
 # application — a deployment restart pays the full corpus-coding pass
 # again.  This entry exercises the REAL index lifecycle (r10 verdict ask
 # #4): the code table is saved to parquet under a content key
@@ -1470,20 +1417,7 @@ def pq_codes_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebooks — exactly what the ADC scan consumes.  Reuses the same
     memoized coded corpus the in-session path builds, so save-after-build
     costs one parquet write of the code table, not a second coding pass."""
-    _pq_parts(spark, sf_dir)  # ensures the memoized corpus exists
-    import os as _os
-
-    from .ann_models import PQ_CODEBOOKS  # noqa: F401 — frozen-lane marker
-
-    st = _os.stat(_os.path.join(sf_dir, "embeddings.parquet"))
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        st.st_mtime_ns,
-        st.st_size,
-        "pq-frozen",
-    )
-    return _PQ_CORPUS_CACHE.get(id(spark), key).select("vec_id", "codes")
+    return _pq_corpus(spark, sf_dir).select("vec_id", "codes")
 
 
 def ann_pq_reload_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

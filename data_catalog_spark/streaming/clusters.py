@@ -79,69 +79,8 @@ def _clst_stage_cache(spark: SparkSession, sf_dir: str) -> str:
     return ensure_materialized(path, build)
 
 
-# The loaded service state — the persisted signature index projected to
-# its sig columns and the resolved old-corpus labels — memoized per
-# (session, index content key) together with the sibling session that
-# owns the loaded frames.  The entry's DECLARED semantics are "the
-# persisted index and old labels load once"; without the memo every
-# invocation re-read both parquet artifacts and re-copied the full
-# signature table into executor blocks before the first probe (the
-# ann_pq "index loads once per process" pattern, r10-adjudicated).  The
-# stream, per-batch probes, merges, and the result computation all still
-# run per invocation with a fresh checkpoint dir.
-_LOADED_STATE = None
-
-
-def _loaded_state(spark: SparkSession, sf_dir: str):
-    global _LOADED_STATE
-    from ..operators import persist
-    from ..operators.corpus import _connected_components
-    from ..operators.dedup import (
-        MINHASH_K,
-        build_mh_sig_index,
-        mh_sig_index_identity,
-        pairs_from_sig_view,
-    )
-    from ..operators.session_cache import SessionLRU
-
-    if _LOADED_STATE is None:
-        _LOADED_STATE = SessionLRU()
-    docs_path, key = mh_sig_index_identity(sf_dir)
-    hit = _LOADED_STATE.get(id(spark), key)
-    if hit is not None:
-        return hit
-
-    sib = spark.newSession()
-    idx = persist.build_or_load(
-        sib, "mh_sig_index", key, lambda: build_mh_sig_index(spark, sf_dir)
-    )
-    sigcols = ["doc_id"] + [f"h{i}" for i in range(MINHASH_K)]
-
-    def build_old_labels() -> DataFrame:
-        idx.select(*sigcols).localCheckpoint(
-            eager=True
-        ).createOrReplaceTempView("__clst_old_sig")
-        pairs = pairs_from_sig_view(sib, "__clst_old_sig")
-        return _connected_components(
-            pairs.select(F.col("da").alias("a"), F.col("db").alias("b"))
-        ).select(
-            F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-        )
-
-    old_key = persist.content_key([docs_path], f"mh-cluster-labels-old|{key}")
-    hit = {
-        "sib": sib,
-        "labels": persist.build_or_load(
-            sib, "mh_cluster_labels_old", old_key, build_old_labels
-        ).localCheckpoint(eager=False),
-        "sigs": idx.select(*sigcols).localCheckpoint(eager=False),
-    }
-    _LOADED_STATE.put(id(spark), key, hit)
-    return hit
-
-
 def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.corpus import _connected_components
+    from ..operators.corpus import _connected_components, mh_old_state
     from ..operators.dedup import mh_signatures, pairs_from_sig_view
     from .ingest import _PREV_RUN_DIRS
 
@@ -151,7 +90,10 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="cluststream-ckpt-")
     _PREV_RUN_DIRS.append(ckpt)
 
-    loaded = _loaded_state(spark, sf_dir)
+    # the persisted index and old labels load once per corpus content;
+    # the stream, per-batch probes, merges, and the result computation
+    # run per invocation with a fresh checkpoint dir
+    loaded = mh_old_state(spark, sf_dir)
     sib = loaded["sib"]
     # mutable service state: resolved labels + the accumulated signatures
     # (the merge REASSIGNS these to new frames; the memoized loaded frames

@@ -17,6 +17,8 @@ from bench import (
     headline_line,
     is_load_suspect,
     load_evidence,
+    memo_delta,
+    runs_record,
     split_cold_steady,
 )
 
@@ -169,6 +171,46 @@ def test_index_serve_lanes_are_declared_headline_entries():
     assert "dedup_minhash" not in INDEX_SERVE
     assert "dedup_ngram_jaccard" not in INDEX_SERVE
     assert "knn_graph_lsh" not in INDEX_SERVE
+    # the training kmeans_train is named for happens only in run 1
+    assert "kmeans_train" not in INDEX_SERVE
+
+
+def test_entry_records_carry_run1_memo_builds_and_hits():
+    """A cold number that was really a memo read must show it: each entry
+    records the memo store's builds and hits during its run 1."""
+    before = {
+        "sig|64": {"builds": 1, "hits": 0},
+        "pairs|minhash": {"builds": 1, "hits": 2},
+    }
+    after = {
+        "sig|64": {"builds": 1, "hits": 3},
+        "pairs|minhash": {"builds": 1, "hits": 2},
+        "clusters|minhash": {"builds": 1, "hits": 0},
+    }
+    assert memo_delta(before, after) == {
+        "builds": 1,
+        "hits": 3,
+        "tags": {
+            "sig|64": {"builds": 0, "hits": 3},
+            "clusters|minhash": {"builds": 1, "hits": 0},
+        },
+    }
+    assert memo_delta(after, after) == {"builds": 0, "hits": 0, "tags": {}}
+
+    memo = {"flat": memo_delta({}, {}), "warm": memo_delta(before, after)}
+    rec = runs_record(
+        {"flat": [1.0, 0.9], "warm": [0.2, 0.1]},
+        {"flat": [0.5, 0.5], "warm": [0.5, 0.5]},
+        [],
+        memo,
+        0.1,
+        load_evidence(0.5, 1.0),
+    )
+    assert rec["memo_run1"] == memo
+    assert rec["cold"] == {"flat": 1.0, "warm": 0.2}
+    assert rec["steady"] == {"flat": 0.9, "warm": 0.1}
+    assert rec["load_verdict"] == "QUIET"
+    json.dumps(rec)  # the record is written as JSON
 
 
 def test_headline_line_carries_suspect_count():

@@ -119,12 +119,13 @@ def test_trained_pq_parity_and_recall(spark, sf_dir, ddb):
 
 
 def test_trained_surfaces_work_from_a_sibling_session(spark, sf_dir):
-    """A spark.newSession() sibling shares the app-keyed float models but
-    must NOT inherit the session-scoped embeddings view: before the
-    session-aware cache key, a warm _MODEL_CACHE made the sibling resolve
-    a temp view registered only in the first session's catalog
-    (TABLE_OR_VIEW_NOT_FOUND)."""
+    """A spark.newSession() sibling must NOT inherit the session-scoped
+    embeddings view, and the float models are session-scoped with it (the
+    sibling retrains): before the session-aware cache key, a warm
+    app-keyed model cache made the sibling resolve a temp view registered
+    only in the first session's catalog (TABLE_OR_VIEW_NOT_FOUND)."""
     from data_catalog_spark.operators import kmeans as km
+    from data_catalog_spark.operators import session_cache
 
     km.kmeans_train(spark, sf_dir).collect()  # warm the caches
     sibling = spark.newSession()
@@ -136,7 +137,7 @@ def test_trained_surfaces_work_from_a_sibling_session(spark, sf_dir):
     finally:
         # drop the sibling's cache entries so later tests in this process
         # never resolve a plan against the discarded session
-        km._EMB_CACHE.drop_session(id(sibling))
+        session_cache.drop_session(sibling)
 
 
 def test_session_cache_is_bounded():

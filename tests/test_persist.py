@@ -137,12 +137,11 @@ def test_reload_entries_serve_from_artifact_without_builder(
     saves; then every in-session memo is cleared AND the builders are
     booby-trapped — the second invocation must serve the identical rows
     purely from the parquet artifact."""
-    from data_catalog_spark.operators import corpus, similarity
+    from data_catalog_spark.operators import corpus, session_cache, similarity
 
     first = corpus.dedup_clusters_reload(spark, sf_dir).collect()
     first_pq = similarity.ann_pq_reload_topk(spark, sf_dir).collect()
-    corpus._CLUSTER_CACHE.clear()
-    similarity._PQ_CORPUS_CACHE.clear()
+    session_cache.clear()
 
     def boom(*a, **k):  # pragma: no cover - must never run
         raise AssertionError("rebuild attempted — load path not exercised")
