@@ -29,13 +29,18 @@ no-op here: a committed snapshot is immediately visible to new reads.
 
 Serving snapshot: searches, GETs and counts of the LATEST committed version
 are answered from one driver-resident ``search.SearchIndex`` of that
-version: its ``pyarrow.Table`` plus token postings and an id → row map (the
-reference answers every search, GET and count from Elasticsearch's
-in-memory inverted index).  ``snapshot()`` builds it once per version, on
-the first serving read, from the version's union of cell scans; the
-instance keeps it in a single lock-guarded slot keyed on (version, manifest
-inode, manifest mtime), so a drop-and-recreate or a replaced orphan dir is
-a different key and can never serve stale rows.  ``search.search`` /
+version: its ``pyarrow.Table`` plus, per manifest cell, token postings and
+an id order (the reference answers every search, GET and count from
+Elasticsearch's in-memory inverted index, which it updates per document
+rather than rebuilding per write).  ``snapshot()`` builds it once per
+version, on the first serving read, with no Spark job: a cell is read with
+``pyarrow.parquet`` and indexed once, then reused by every later version
+that still points at it, so a commit costs the next build only its touched
+cells.  The instance keeps the index and the cells in a single
+lock-guarded slot keyed on (version, manifest inode, manifest mtime), and
+each cell on its owner, name and files' (name, inode, mtime_ns, size), so
+a drop-and-recreate or a replaced orphan dir is a different key and can
+never serve stale rows.  ``search.search`` /
 ``search.count`` answer the compiled query from it in the driver, and a
 GET is an id lookup in it, so a served read runs no Spark job.  The
 snapshot applies only to tables of at most ``PIN_MAX_BYTES`` parquet bytes
@@ -61,12 +66,14 @@ import tempfile
 import threading
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .errors import CommitConflictError, EntryNotFoundError, InvalidEntryError
-from .search import SearchIndex
+from .search import CellIndex, SearchIndex
 from .schema import (
     COLUMN_ORDER,
     CREATION_TIME_FIELD,
@@ -79,15 +86,28 @@ from .schema import (
 
 _UNSET = object()  # sentinel: _commit resolves the base version itself
 
+# The served Arrow schema: DATASETS_SCHEMA's columns, every one nullable.
+# A cell's parquet files hold all of them but isPublic, which the cell's
+# directory names.
+ARROW_SCHEMA = pa.schema([
+    (f.name, {"string": pa.string(), "bigint": pa.int64(), "boolean": pa.bool_()}[
+        f.dataType.simpleString()])
+    for f in DATASETS_SCHEMA.fields
+])
+
 
 class _Slot:
     """The serving-snapshot slot: the latest version's key and search index
-    (None when the version is above the size bound)."""
+    (None when the version is above the size bound), and that version's
+    cells: each one's rows (a slice of the index's table) and
+    ``search.CellIndex`` by (owner version, cell, its parquet files'
+    (name, inode, mtime_ns, size))."""
 
     def __init__(self):
         self.lock = threading.Lock()
         self.key = None
         self.index: SearchIndex | None = None
+        self.cells: dict[tuple, tuple[pa.Table, CellIndex]] = {}
 
 
 class DatasetsCatalog:
@@ -101,23 +121,25 @@ class DatasetsCatalog:
     # The serving snapshot's size bound, in parquet bytes of the version's
     # cells.  It bounds driver memory, not latency: the indexed snapshot
     # answered searches faster than the Spark plan at every size measured.
-    # Measured on a 4-core box (1 GB driver heap) with entries shaped like
-    # the benchmark's catalog, per size: parquet, Arrow table, build time
-    # of a snapshot (toArrow + index; the first reader after each commit
-    # waits for it), the index's share of that, and the Python RSS growth
-    # of the first build, which includes the allocator's slack from the
-    # build's temporaries.  20k entries: 1.4 MiB, 4.6 MiB, 0.40-0.59 s,
-    # 0.06-0.09 s, +16 MiB; 80k: 5.4, 18.2, 0.70-0.73 s, 0.20-0.22 s, +45;
-    # 160k: 10.6, 36.5, 1.11-1.21 s, 0.52-0.56 s, +74-80 (the table alone,
-    # without the index: 0.29 / 0.43 / 0.60 s and +5 / +20 / +39 MiB).
-    # The index keeps about a quarter of the table (lowered titles, int32
-    # postings and id order).  Readers still running on a superseded
-    # version keep it alive, so two versions can be resident at once:
-    # +117 MiB at 160k entries and +157 MiB at 210k (13.8 MiB of parquet).
-    # 12 MiB of parquet (about 180k entries) keeps that within 100-160 MiB
-    # of driver memory.  Search p50 over the snapshot was 3.7 / 9.4 / 20 ms
-    # at 20k / 80k / 160k entries (the unindexed table: 9.5 / 36 / 72 ms;
-    # the Spark plan: 810-1270 ms).
+    # Measured on a 4-core box (1 GB driver heap, load 3-4) with entries
+    # shaped like the benchmark's catalog (6 non-empty cells), per size:
+    # parquet, Arrow table, the cells' indexes, the build of a version with
+    # no cell to reuse, the build after a one-entry commit (what the first
+    # reader after it waits for), and the Python RSS growth of the first
+    # build and with two versions resident (a reader still on the
+    # superseded one), both with the allocator's slack.  20k entries:
+    # 1.4 MiB, 4.6 MiB, 1.2 MiB, 0.08-0.16 s, 0.016-0.028 s, +21 MiB,
+    # +48 MiB; 80k: 5.4, 18.2, 4.6, 0.40-0.45 s, 0.06-0.09 s, +57, +82;
+    # 160k: 10.6, 36.5, 9.2, 0.56-0.80 s, 0.10-0.16 s, +104, +130.  A whole
+    # version built with a Spark toArrow instead rebuilt in 0.54-0.67 /
+    # 0.87-0.90 / 1.0-1.6 s after each commit and grew by +18 / +45 / +78
+    # and +48 / +90 / +130 MiB.  Versions share their cells' indexes but
+    # each copies the rows into one chunk (a search's takes and filters
+    # then run one kernel per column), so two resident versions cost what
+    # they did, and 12 MiB of parquet (about 180k entries) still keeps
+    # them within 100-160 MiB of driver memory.  Search p50 over the
+    # snapshot was 3.7 / 9.4 / 20 ms at 20k / 80k / 160k entries (the
+    # unindexed table: 9.5 / 36 / 72 ms; the Spark plan: 810-1270 ms).
     PIN_MAX_BYTES = 12 * 1024 * 1024
 
     def __init__(self, spark: SparkSession, path: str):
@@ -146,6 +168,7 @@ class DatasetsCatalog:
         """S8: drop the whole table (elastic_admin.py:41-52)."""
         with self._slot.lock:
             self._slot.key = self._slot.index = None
+            self._slot.cells = {}
         if os.path.isdir(self.path):
             shutil.rmtree(self.path)
 
@@ -407,20 +430,31 @@ class DatasetsCatalog:
 
     def snapshot(self) -> SearchIndex | None:
         """The latest committed version as one driver-resident
-        ``search.SearchIndex`` (its Arrow table, lowered titles, text
-        postings and id → row map), which served searches, GETs and counts
-        query — or None for a legacy manifest-less snapshot or a table
-        above ``PIN_MAX_BYTES`` (the caller then queries ``df()``).
+        ``search.SearchIndex`` (its Arrow table and, per cell, lowered
+        titles, text postings and id order), which served searches, GETs
+        and counts query — or None for a legacy manifest-less snapshot or
+        a table above ``PIN_MAX_BYTES`` (the caller then queries ``df()``).
 
         Built once per version, by the first serving read of it, under the
-        slot lock, so concurrent first readers wait for one build (the
-        ``toArrow`` read plus the index) instead of each running their own.  The slot key is (version, manifest
-        inode, manifest mtime): the manifest is written once per snapshot
-        dir, so a dropped and recreated table or a replaced orphan dir gets
-        a new key even at the same version number.  The key is taken
-        BEFORE the manifest is read, so a table is never filed under a
-        newer key than its data.  The superseded index is dropped from the
-        slot before the build; readers still holding it finish on it."""
+        slot lock, so concurrent first readers wait for one build instead
+        of each running their own.  The build runs no Spark job.  It lists
+        the manifest's cell dirs, reuses the rows and ``search.CellIndex``
+        of every cell the previous build holds, reads and indexes only the
+        others, with ``pyarrow.parquet`` from their files (``_read_cell``),
+        and copies the cells' rows into the version's one-chunk table.  A
+        committed cell's files never change, and the cell key (owner
+        version, cell, each file's name, inode, mtime_ns and size) changes
+        with any rewrite, so a dropped and recreated table or a replaced
+        orphan dir never reuses a stale cell.  The slot keeps the latest
+        version's cells only.
+
+        The slot key is (version, manifest inode, manifest mtime): the
+        manifest is written once per snapshot dir, so a dropped and
+        recreated table or a replaced orphan dir gets a new key even at the
+        same version number.  The key is taken BEFORE the manifest is read,
+        so an index is never filed under a newer key than its data.  The
+        superseded index is dropped from the slot before the build;
+        readers still holding it finish on it."""
         self.create_if_not_exists()
         slot = self._slot
         with slot.lock:
@@ -437,15 +471,59 @@ class DatasetsCatalog:
                 manifest = self._manifest(version)
                 if manifest is None:
                     return None
-                nbytes = sum(
-                    e.stat().st_size
-                    for cell, owner in manifest.items()
-                    for e in self._cell_files(owner, cell)
-                )
+                files = {}  # cell key -> the cell's parquet files
+                for cell, owner in sorted(manifest.items()):
+                    found = sorted(self._cell_files(owner, cell), key=lambda e: e.name)
+                    stats = tuple(
+                        (e.name, s.st_ino, s.st_mtime_ns, s.st_size)
+                        for e in found
+                        for s in [e.stat()]
+                    )
+                    files[(owner, cell, stats)] = found
+                nbytes = sum(s[3] for _, _, stats in files for s in stats)
+                cells = {}
                 if nbytes <= self.PIN_MAX_BYTES:
-                    slot.index = SearchIndex.build(self._read_cells(manifest).toArrow())
+                    parts = {
+                        ckey: slot.cells.get(ckey) or self._read_cell(ckey[1], found)
+                        for ckey, found in files.items()
+                    }
+                    empty = ARROW_SCHEMA.empty_table()
+                    slot.index = SearchIndex.of_cells(
+                        parts.values() or [(empty, CellIndex.build(empty))]
+                    )
+                    # the cells keep their rows as slices of the version's
+                    # table, so the slot holds one copy of them
+                    cells = {
+                        ckey: (slot.index.cell_table(i), cell)
+                        for i, (ckey, (_, cell)) in enumerate(parts.items())
+                    }
+                slot.cells = cells
                 slot.key = key
             return slot.index
+
+    def _read_cell(
+        self, cell: str, files: list[os.DirEntry]
+    ) -> tuple[pa.Table, CellIndex]:
+        """One manifest cell's rows and their index, the rows read with
+        ``pyarrow.parquet`` from its files (no directory discovery, no
+        Spark job; on one thread: a cell is small, and a read on the
+        Arrow pool's threads measured a few MiB more resident memory);
+        isPublic comes from the cell's partition value (null for
+        ``__HIVE_DEFAULT_PARTITION__``)."""
+        pos = ARROW_SCHEMA.get_field_index(self.PARTITION_COL)
+        file_schema = ARROW_SCHEMA.remove(pos)
+        tables = [file_schema.empty_table()]
+        for e in files:
+            with pq.ParquetFile(e.path) as f:
+                tables.append(
+                    f.read(columns=file_schema.names, use_threads=False).cast(file_schema)
+                )
+        table = pa.concat_tables(tables)
+        value = pa.scalar(self._cell_tuple(cell)[0], pa.bool_())
+        table = table.add_column(
+            pos, ARROW_SCHEMA.field(pos), pa.repeat(value, table.num_rows)
+        )
+        return table, CellIndex.build(table)
 
     def _read_cells(self, manifest: dict[str, int]) -> DataFrame:
         """Union-of-scans over the cells a (sub)manifest points at — the

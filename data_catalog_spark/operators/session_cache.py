@@ -18,7 +18,9 @@ session's entries wholesale, releasing that session (and everything its
 plans pin) to the collector.  Long-lived apps with one or two sessions
 never evict; session-churning apps are bounded by construction.
 
-Release on eviction, ``drop_session`` and ``clear``: dropping the Python
+Release on eviction, ``drop_session``, ``clear`` and supersession (a
+rebuild for a regenerated input file releases the entry built from the
+file's previous version, see ``derived``): dropping the Python
 reference alone frees a ``localCheckpoint``'d DataFrame's executor
 blocks only after Python GC → py4j finalizer → JVM ContextCleaner, so
 every released DataFrame (also inside tuples/lists/dicts) is
@@ -101,6 +103,14 @@ class SessionLRU:
             for v in bundle.values():
                 _release(v)
 
+    def discard(self, session_id: int, stale: Callable[[Hashable], bool]) -> None:
+        """Remove and release the session's entries whose key is ``stale``."""
+        with self._lock:
+            entries = self._by_session.get(session_id, {})
+            gone = [entries.pop(k) for k in [k for k in entries if stale(k)]]
+        for v in gone:
+            _release(v)
+
     def drop_session(self, session_id: int) -> None:
         with self._lock:
             entries = self._by_session.pop(session_id, None)
@@ -132,10 +142,13 @@ def derived(
 ) -> T:
     """The memoized value of ``build()`` for this session and corpus.
 
-    Key: ``(applicationId, abspath(sf_dir), st_mtime_ns, st_size of
-    <sf_dir>/<table>.parquet, tag)`` — a regenerated input file (new
-    mtime or size) rebuilds instead of hitting.  ``tag`` names the call
-    site and must be distinct per site: several sites derive from the
+    Key: ``(applicationId, abspath(sf_dir), table, tag, st_mtime_ns,
+    st_size of <sf_dir>/<table>.parquet)`` — a regenerated input file (new
+    mtime or size) rebuilds instead of hitting, and that rebuild first
+    releases the session's entry of the same (applicationId, dir, table,
+    tag) with the old (mtime, size), which could never hit again.  Another
+    directory is another key and keeps its entries.  ``tag`` names the
+    call site and must be distinct per site: several sites derive from the
     same file, and without it one would be handed another's frame.
 
     Scope: ``id(spark)``.  A cached plan resolves against its session's
@@ -153,18 +166,14 @@ def derived(
     lock and may call ``derived`` themselves.  Per-tag build and hit
     counts are read by ``stats()``."""
     st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        st.st_mtime_ns,
-        st.st_size,
-        tag,
-    )
+    site = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), table, tag)
+    key = (*site, st.st_mtime_ns, st.st_size)
     hit = _STORE.get(id(spark), key)
     if hit is not None:
         with _STATS_LOCK:
             _HITS[tag] += 1
         return hit
+    _STORE.discard(id(spark), lambda k: k[:4] == site and k != key)
     value = build()
     _STORE.put(id(spark), key, value)
     with _STATS_LOCK:

@@ -19,13 +19,17 @@ driver) — no global sort.  Facets are partial-aggregated map-side.
 
 Index rendering (bottom of the module): the catalog serves searches, GETs
 and counts from a ``SearchIndex`` of its latest version
-(``DatasetsCatalog.snapshot``): the version's ``pyarrow.Table``, its
-``utf8_lower``ed titles, token → row postings of the lowered ``dataSample``
-(split on ``analyzers.STANDARD_SPLIT``) and ``sourceUri`` (split on
-``URI_SPLIT``, stopwords dropped), and an id → row map, all built once per
-version.  ``search`` and ``count`` dispatch on the source they get: a
-DataFrame runs the Spark plan, an index is answered in the driver with no
-Spark job.
+(``DatasetsCatalog.snapshot``): the version's ``pyarrow.Table`` and one
+``CellIndex`` per manifest cell, holding the cell's ``utf8_lower``ed
+titles, token → row postings of the lowered ``dataSample`` (split on
+``analyzers.STANDARD_SPLIT``) and ``sourceUri`` (split on ``URI_SPLIT``,
+stopwords dropped), and its rows in id order.  A cell is indexed once and
+shared by every version that holds it, so a commit costs the next version
+only its touched cells and one copy of the rows into one chunk.  A text
+search scores all titles in one call and marks each cell's postings at the
+cell's row offset.  ``search`` and ``count`` dispatch on the source they
+get: a DataFrame runs the Spark plan, an index is answered in the driver
+with no Spark job.
 
 Why the postings give the regex clauses' answer: the oracle and the Spark
 plan match ``dataSample``/``sourceUri`` with
@@ -487,27 +491,26 @@ class Postings:
 
 
 @dataclass(frozen=True)
-class SearchIndex:
-    """What served reads query: one version's table, its lowered titles,
-    the ``dataSample`` and ``sourceUri`` postings, and an id → row map:
-    the rows in id order (``rows_by_id``), searched by bisection — 4 bytes
-    an entry, where a dict of Python strings costs about 170."""
+class CellIndex:
+    """What a search reads of one manifest cell's rows besides the rows
+    themselves: their lowered titles, the ``dataSample`` and ``sourceUri``
+    postings, and the rows in id order (``rows_by_id``, searched by
+    bisection: 4 bytes an entry, where a dict of Python strings costs about
+    170).  Row positions are the cell's own.  A committed cell never
+    changes, so the catalog builds this once per cell and every version
+    that holds the cell shares it."""
 
-    table: pa.Table
     title: pa.Array
     data_sample: Postings
     source_uri: Postings
     rows_by_id: np.ndarray
 
     @classmethod
-    def build(cls, table: pa.Table) -> SearchIndex:
-        table = table.combine_chunks()
-
+    def build(cls, table: pa.Table) -> CellIndex:
         def lowered(name):
             return pc.utf8_lower(table[name]).combine_chunks()
 
         return cls(
-            table=table,
             title=lowered("title"),
             data_sample=Postings.build(lowered("dataSample"), analyzers.STANDARD_SPLIT),
             source_uri=Postings.build(
@@ -519,18 +522,63 @@ class SearchIndex:
 
     @property
     def num_rows(self) -> int:
+        return len(self.rows_by_id)
+
+
+@dataclass(frozen=True)
+class SearchIndex:
+    """What served reads query: one version's rows as one table and the
+    index of each of its cells, cell ``i`` holding rows
+    ``starts[i]:starts[i + 1]``, with the cells' lowered titles as one
+    chunked array (``titles``, no copy).  The table is one chunk and the
+    titles are matched by one call because a search's cost is mostly its
+    count of pyarrow calls: each one lets the GIL go to the server's other
+    threads, and a take from a many-chunk table also concatenates it."""
+
+    table: pa.Table
+    cells: tuple[CellIndex, ...]
+    starts: np.ndarray
+    titles: pa.ChunkedArray
+
+    @classmethod
+    def of_cells(cls, parts) -> SearchIndex:
+        """The index over ``(table, CellIndex)`` parts (at least one, all of
+        one schema).  The tables are copied into one chunk, at a fraction
+        of the cost of indexing one cell."""
+        tables, cells = zip(*parts)
+        return cls(
+            table=pa.concat_tables(tables).combine_chunks(),
+            cells=cells,
+            starts=np.cumsum([0] + [c.num_rows for c in cells]),
+            titles=pa.chunked_array([c.title for c in cells]),
+        )
+
+    @classmethod
+    def build(cls, table: pa.Table) -> SearchIndex:
+        """The index of a bare table, as one cell."""
+        return cls.of_cells([(table, CellIndex.build(table))])
+
+    @property
+    def num_rows(self) -> int:
         return self.table.num_rows
 
+    def cell_table(self, i: int) -> pa.Table:
+        """Cell ``i``'s rows: a slice of ``table``, no copy."""
+        return self.table.slice(self.starts[i], self.cells[i].num_rows)
+
     def row(self, entry_id: str) -> dict | None:
-        """The (first) entry with ``entry_id`` as a dict, or None.  Arrow
-        orders strings by their UTF-8 bytes, which is Python's code-point
-        order, so the bisection agrees with the sort."""
-        ids, order = self.table["id"], self.rows_by_id
-        k = bisect.bisect_left(range(len(order)), entry_id,
-                               key=lambda i: ids[order[i]].as_py())
-        if k == len(order) or ids[order[k]].as_py() != entry_id:
-            return None
-        return self.table.slice(order[k], 1).to_pylist()[0]
+        """The entry with ``entry_id`` as a dict, from the first cell that
+        holds it, or None.  Arrow orders strings by their UTF-8 bytes,
+        which is Python's code-point order, so the bisection agrees with
+        the sort."""
+        ids = self.table["id"]
+        for cell, start in zip(self.cells, self.starts):
+            order = cell.rows_by_id
+            k = bisect.bisect_left(range(len(order)), entry_id,
+                                   key=lambda i: ids[start + order[i]].as_py())
+            if k < len(order) and ids[start + order[k]].as_py() == entry_id:
+                return self.table.slice(start + order[k], 1).to_pylist()[0]
+        return None
 
 
 def _all_of(masks):
@@ -571,15 +619,19 @@ def text_scores(index: SearchIndex, text: str) -> np.ndarray:
     """Every row's relevance score for ``text`` (score_column's twin): the
     boosts of the clauses it matches, added in clause order; 0 where none
     matches.  The title clause is a substring test of the folded text in
-    the lowered titles; the dataSample and sourceUri clauses read the
-    postings of the text's tokens."""
-    title = pc.match_substring(index.title, analyzers.fold_case(text))
-    score = pc.fill_null(title, False).to_numpy(zero_copy_only=False) * TITLE_BOOST
-    for postings, tokens, boost in (
-        (index.data_sample, analyzers.standard_tokens(text), DATASAMPLE_BOOST),
-        (index.source_uri, analyzers.uri_tokens(text), SOURCEURI_BOOST),
+    the lowered titles; the dataSample and sourceUri clauses mark the rows
+    each cell's postings list under the text's tokens, at the cell's row
+    offset."""
+    title = pc.match_substring(index.titles, analyzers.fold_case(text))
+    score = pc.fill_null(title, False).to_numpy() * TITLE_BOOST
+    for name, tokens, boost in (
+        ("data_sample", analyzers.standard_tokens(text), DATASAMPLE_BOOST),
+        ("source_uri", analyzers.uri_tokens(text), SOURCEURI_BOOST),
     ):
-        score += postings.mark(np.zeros(index.num_rows, bool), tokens) * boost
+        hit = np.zeros(index.num_rows, bool)
+        for cell, start in zip(index.cells, index.starts):
+            getattr(cell, name).mark(hit[start:start + cell.num_rows], tokens)
+        score += hit * boost
     return score
 
 

@@ -4,6 +4,8 @@ visibility, bulk load with rejects, validation matrix (SURVEY §5)."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from data_catalog_spark.catalog import DatasetsCatalog
 from data_catalog_spark.errors import (
@@ -881,6 +883,203 @@ def test_pin_is_size_checked(spark, tmp_path, monkeypatch):
     assert unpinned.catalog.snapshot() is None
     assert unpinned.catalog._slot.key is not None  # checked once per version
     assert got == want
+
+
+# -- per-cell serving state: a commit rebuilds only its touched cells
+
+
+def test_commit_reuses_untouched_cell_indexes(spark, tmp_path, monkeypatch):
+    """A one-entry commit leaves every untouched cell's ``CellIndex`` the
+    same object in the next version's index, and the build reads only the
+    touched cell from parquet."""
+    path = str(tmp_path / "cells")
+    _pin_fixture(spark, path)
+    cat = DatasetsCatalog(spark, path)
+    old = cat.snapshot()
+    before = dict(cat._slot.cells)
+    assert len(before) == len(cat._manifest(cat._latest_version())) > 2
+    reads = []
+    real = cat._read_cell
+
+    def read_cell(cell, files):
+        reads.append(cell)
+        return real(cell, files)
+
+    monkeypatch.setattr(cat, "_read_cell", read_cell)
+    cat.upsert("e1", {**ENTRY, "title": "one entry changed", "isPublic": False,
+                      "orgUUID": "org01"})
+    new = cat.snapshot()
+    after = cat._slot.cells
+    kept = before.keys() & after.keys()
+    assert len(kept) == len(after) - 1 and len(reads) == 1
+    for k in kept:
+        assert after[k][1] is before[k][1]
+        assert any(c is before[k][1] for c in new.cells)
+    assert new.row("e1")["title"] == "one entry changed"
+    assert old.row("e1")["title"] == "a great title 1"  # the old version is intact
+    assert sorted(map(tuple, cat.df().collect())) == sorted(
+        tuple(r.values()) for r in new.table.to_pylist()
+    )
+
+
+def test_first_served_read_after_commit_runs_no_spark_job(spark, tmp_path):
+    """The first search, count and GET after a commit build the new
+    version's index in their own job group without a Spark job: the touched
+    cell is read with pyarrow, and the reads see the write."""
+    from data_catalog_spark.query import DataSetFiltering
+    from data_catalog_spark.service import DataCatalogService
+
+    path = str(tmp_path / "nojob")
+    _pin_fixture(spark, path)
+    svc = DataCatalogService(DatasetsCatalog(spark, path))
+    mode = DataSetFiltering.PRIVATE_AND_PUBLIC
+    first = svc.search({"query": "great"}, ["org01"], mode)[0]["total"]
+    svc.catalog.upsert("new", {**ENTRY, "title": "a great new title", "orgUUID": "org01"})
+    key = svc.catalog._slot.key
+    sc = spark.sparkContext
+    sc.setJobGroup("after-commit", "first reads after a commit")
+    try:
+        body, status = svc.search({"query": "great"}, ["org01"], mode)
+        assert status == 200 and body["total"] == first + 1
+        assert svc.catalog._slot.key != key  # this read built the version
+        assert svc.count(["org01"], mode)[0]["total"] == 7
+        assert svc.get_entry("new", [], True)[0]["title"] == "a great new title"
+        assert sc.statusTracker().getJobIdsForGroup("after-commit") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+_WORDS = ["amber", "birch", "cedar", "delta"]
+
+
+def _cell_answers(index, ids) -> list:
+    """Every answer a served read gives from ``index``: searches and counts
+    in three scopes and modes, and a GET of each id."""
+    from data_catalog_spark import search
+    from data_catalog_spark.query import DataSetFiltering, compile_query
+
+    out = [index.num_rows]
+    for orgs, mode in [(["org01"], DataSetFiltering.PRIVATE_AND_PUBLIC),
+                       (["org02", "org03"], DataSetFiltering.ONLY_PRIVATE),
+                       ([], DataSetFiltering.ONLY_PUBLIC)]:
+        for q in [{"query": w, "size": 20} for w in _WORDS] + [
+                {"query": "amber cedar", "filters": [{"format": ["csv"]}]},
+                {"filters": [{"category": ["health"]}], "size": 50}]:
+            cq = compile_query(q, orgs, mode, False)
+            out.append((search.search(index, cq), search.count(index, cq)))
+    out.extend(index.row(i) for i in ids)
+    return out
+
+
+def _cell_entry(k: int, w: int) -> dict:
+    return {**ENTRY, "title": f"{_WORDS[w % 4]} {_WORDS[k % 4]}",
+            "dataSample": f"id,{_WORDS[(w + 1) % 4]}", "format": ["csv", "json"][w % 2],
+            "isPublic": w % 3 == 0, "orgUUID": f"org0{w % 3 + 1}"}
+
+
+@pytest.fixture(scope="module")
+def cell_base(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("cellbase") / "cat")
+    DatasetsCatalog(spark, path).bulk_upsert(
+        [(f"e{k}", _cell_entry(k, k)) for k in range(8)])
+    return path
+
+
+_CELL_OPS = st.lists(
+    st.tuples(st.sampled_from(["upsert", "patch", "delete", "public", "org"]),
+              st.integers(0, 9), st.integers(0, 5)),
+    min_size=1, max_size=3)
+
+
+@settings(max_examples=4, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(ops=_CELL_OPS)
+def test_cell_built_index_matches_a_whole_table_build(spark, cell_base, tmp_path, ops):
+    """After every commit of a sequence of upserts, patches, deletes and
+    isPublic / orgUUID flips, the index built from reused and re-read cells
+    gives the same search, count and GET answers as
+    ``SearchIndex.build(df().toArrow())`` of the same version."""
+    import shutil
+    import uuid
+
+    from data_catalog_spark.search import SearchIndex
+
+    path = str(tmp_path / uuid.uuid4().hex)
+    shutil.copytree(cell_base, path)
+    cat = DatasetsCatalog(spark, path)
+    ids = [f"e{k}" for k in range(10)]
+    cat.snapshot()
+    for op, k, w in ops:
+        eid = f"e{k}"
+        try:
+            if op == "upsert":
+                cat.upsert(eid, _cell_entry(k, w))
+            elif op == "patch":
+                cat.partial_update(eid, {"title": f"{_WORDS[w % 4]} patched"})
+            elif op == "delete":
+                cat.delete(eid)
+            elif op == "public":
+                cat.partial_update(eid, {"isPublic": not cat.get(eid)["isPublic"]})
+            else:
+                cat.partial_update(eid, {"orgUUID": f"org0{w % 3 + 1}"})
+        except EntryNotFoundError:
+            continue
+        want = _cell_answers(SearchIndex.build(cat.df().toArrow()), ids)
+        assert _cell_answers(cat.snapshot(), ids) == want, (op, k, w)
+
+
+def test_null_partition_cell_round_trips(spark, tmp_path):
+    """A row with a null isPublic lives in the ``__HIVE_DEFAULT_PARTITION__``
+    cell; read from parquet by pyarrow it comes back with a null isPublic,
+    the same row ``df()`` reads, and no visibility mode admits it for a
+    caller outside its org."""
+    from pyspark.sql import types as T
+
+    from data_catalog_spark import search
+    from data_catalog_spark.query import DataSetFiltering, compile_query
+    from data_catalog_spark.schema import COLUMN_ORDER, DATASETS_SCHEMA
+
+    cat = DatasetsCatalog(spark, str(tmp_path / "nullcell"))
+    cat.upsert("pub", ENTRY)
+    nullable = T.StructType([T.StructField(f.name, f.dataType, True)
+                             for f in DATASETS_SCHEMA.fields])
+    rows = [{**ENTRY, "id": i, "isPublic": p, "storeType": None}
+            for i, p in (("pub", True), ("nul", None))]
+    post = spark.createDataFrame([[r[c] for c in COLUMN_ORDER] for r in rows], nullable)
+    cat._commit(post, expected_version=cat._latest_version())
+    assert any(c.startswith("__HIVE_DEFAULT_PARTITION__/")
+               for c in cat._manifest(cat._latest_version()))
+    served = cat.snapshot()
+    assert served.row("nul") == cat.df().where("id = 'nul'").first().asDict()
+    assert served.row("nul")["isPublic"] is None
+    assert sorted(map(tuple, cat.df().collect()), key=str) == sorted(
+        (tuple(r.values()) for r in served.table.to_pylist()), key=str)
+    for mode, want in [(DataSetFiltering.PRIVATE_AND_PUBLIC, ["pub"]),
+                       (DataSetFiltering.ONLY_PUBLIC, ["pub"]),
+                       (DataSetFiltering.ONLY_PRIVATE, [])]:
+        cq = compile_query({"query": "great"}, ["org01"], mode, False)
+        assert [h["id"] for h in search.search(served, cq).hits] == want
+
+
+def test_recreated_table_never_serves_a_stale_cell(spark, tmp_path):
+    """A table dropped and rebuilt to the same version numbers, with its
+    rows in the same cells and owner versions, gets new cell keys (its
+    files are new), so an instance holding the old cells re-reads them."""
+    path = str(tmp_path / "recells")
+    a = DatasetsCatalog(spark, path)
+    b = DatasetsCatalog(spark, path)
+    a.upsert("old1", ENTRY)
+    a.upsert("old2", ENTRY)
+    assert _served_ids(b) == {"old1", "old2"}
+    old_keys = set(b._slot.cells)
+    a.drop()
+    a.upsert("new1", {**ENTRY, "title": "rebuilt"})
+    a.upsert("new2", {**ENTRY, "title": "rebuilt"})
+    assert _served_ids(b) == {"new1", "new2"}
+    assert {k[:2] for k in b._slot.cells} == {k[:2] for k in old_keys}
+    assert not set(b._slot.cells) & old_keys
+    assert b.get("new2")["title"] == "rebuilt"
 
 
 # -- writes retry a lost commit race -------------------------

@@ -633,3 +633,44 @@ def test_index_matches_regex_at_token_boundaries(scope):
     con.close()
     # every clause, alone and in sum, decided some hit
     assert {1.0, 2.0, 3.0} <= scores and len(scores) >= 5
+
+
+# The code points DuckDB 1.0's ``lower`` leaves as they are while Arrow's
+# ``utf8_lower`` and ``analyzers.fold_case`` lower them (ARCHITECTURE "Known
+# divergences"): U+2C2F, seven Latin Extended-D capitals and the Vithkuqi
+# capitals.
+DUCKDB_UNLOWERED = (
+    {0x2C2F, 0xA7C0, 0xA7C7, 0xA7C9, 0xA7D0, 0xA7D6, 0xA7D8, 0xA7F5}
+    | set(range(0x10570, 0x10596)) - {0x1057B, 0x1058B, 0x10593}
+)
+
+
+def test_duckdb_lower_differs_on_exactly_43_code_points():
+    """Every code point but the surrogates through DuckDB's ``lower``,
+    Arrow's ``utf8_lower`` and ``analyzers.fold_case``: Arrow and
+    ``fold_case`` agree on all of them, and DuckDB differs from both on
+    exactly the 43 of ``DUCKDB_UNLOWERED``, each of which it leaves as it
+    is.  A DuckDB or Arrow upgrade that moves the set fails here."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from data_catalog_spark import analyzers
+
+    cps = np.array([i for i in range(0x110000) if not 0xD800 <= i <= 0xDFFF])
+    chars = [chr(i) for i in cps]
+    arrow = pc.utf8_lower(pa.array(chars))
+    assert arrow.equals(pa.array([analyzers.fold_case(c) for c in chars]))
+    con = duckdb.connect()
+    try:
+        con.register("code_points", pa.table({"k": cps, "c": chars}))
+        duck = con.execute(
+            "SELECT lower(c) AS l FROM code_points ORDER BY k"
+        ).arrow()["l"]
+    finally:
+        con.close()
+    differs = np.flatnonzero(pc.not_equal(duck, arrow).to_numpy(zero_copy_only=False))
+    assert set(cps[differs].tolist()) == DUCKDB_UNLOWERED
+    assert len(DUCKDB_UNLOWERED) == 43
+    assert all(duck[int(k)].as_py() == chars[k] for k in differs)

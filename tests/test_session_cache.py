@@ -132,7 +132,8 @@ def test_sites_on_one_file_get_distinct_frames(spark, sf_dir):
 
 def test_regenerated_input_rebuilds(spark, sf_dir, tmp_path):
     """A new mtime on documents.parquet is a new key: the next call
-    rebuilds instead of serving the old corpus's frame."""
+    rebuilds instead of serving the old corpus's frame, and releases the
+    old frame, whose scratch dir goes with it."""
     from data_catalog_spark.operators import dedup
 
     shutil.copy(
@@ -143,6 +144,8 @@ def test_regenerated_input_rebuilds(spark, sf_dir, tmp_path):
     before = session_cache.stats()
     first = dedup.mh_sig_table(spark, d)
     assert dedup.mh_sig_table(spark, d) is first
+    n = first.count()
+    first_dir = first._scratch_dir
     st = os.stat(tmp_path / "documents.parquet")
     os.utime(
         tmp_path / "documents.parquet",
@@ -151,4 +154,24 @@ def test_regenerated_input_rebuilds(spark, sf_dir, tmp_path):
     second = dedup.mh_sig_table(spark, d)
     assert second is not first
     assert _builds(before, session_cache.stats()) == {"sig|64": 2}
-    assert second.count() == first.count()
+    assert second.count() == n
+    assert not os.path.exists(first_dir)
+    assert os.path.isdir(second._scratch_dir)
+
+
+def test_other_directory_is_not_released(spark, sf_dir, tmp_path):
+    """The same file in another directory is another key: building it
+    leaves the first directory's entry resident and its scratch dir in
+    place, and the first directory still hits."""
+    from data_catalog_spark.operators import dedup
+
+    dirs = []
+    for name in ("a", "b"):
+        (tmp_path / name).mkdir()
+        shutil.copy(os.path.join(sf_dir, "documents.parquet"), tmp_path / name)
+        dirs.append(str(tmp_path / name))
+    first = dedup.mh_sig_table(spark, dirs[0])
+    second = dedup.mh_sig_table(spark, dirs[1])
+    assert second is not first
+    assert os.path.isdir(first._scratch_dir) and os.path.isdir(second._scratch_dir)
+    assert dedup.mh_sig_table(spark, dirs[0]) is first
