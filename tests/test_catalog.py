@@ -4,7 +4,7 @@ visibility, bulk load with rejects, validation matrix (SURVEY §5)."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from data_catalog_spark.catalog import DatasetsCatalog
@@ -890,8 +890,8 @@ def test_pin_is_size_checked(spark, tmp_path, monkeypatch):
 
 def test_commit_reuses_untouched_cell_indexes(spark, tmp_path, monkeypatch):
     """A one-entry commit leaves every untouched cell's ``CellIndex`` the
-    same object in the next version's index, and the build reads only the
-    touched cell from parquet."""
+    same object in the next version's index, and the build reads no cell
+    from parquet: the commit filed the touched one."""
     path = str(tmp_path / "cells")
     _pin_fixture(spark, path)
     cat = DatasetsCatalog(spark, path)
@@ -911,7 +911,7 @@ def test_commit_reuses_untouched_cell_indexes(spark, tmp_path, monkeypatch):
     new = cat.snapshot()
     after = cat._slot.cells
     kept = before.keys() & after.keys()
-    assert len(kept) == len(after) - 1 and len(reads) == 1
+    assert len(kept) == len(after) - 1 and reads == []
     for k in kept:
         assert after[k][1] is before[k][1]
         assert any(c is before[k][1] for c in new.cells)
@@ -1148,3 +1148,291 @@ def test_write_losing_every_attempt_raises_conflict(spark, tmp_path):
     assert err.value.code == 409
     assert len(calls) == a.COMMIT_ATTEMPTS
     assert "late" not in _ids(a)
+
+
+# -- list-lane writes commit from the driver (the Arrow payload producer)
+
+
+def test_bucket_of_agrees_with_bucket_expr(spark):
+    """The driver's ``_bucket_of`` (which names the cells the Arrow
+    producer writes) and the SQL ``_bucket_expr`` (which names the cells
+    ``_merge_batch`` and ``compact`` write) give every org string the same
+    bucket: None, empty, unicode, mixed case, leading and trailing
+    spaces."""
+    import random
+
+    rng = random.Random(7)
+    alphabet = "abcXYZ019-_ .:/éßİıΣσ中文😀\t"
+    orgs = [None, "", " ", "org01", "ORG01", " org01", "org01 ", "Org01\t",
+            "İSTANBUL", "straße", "中文", "😀"]
+    while len(orgs) < 2000:
+        core = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 24)))
+        orgs.append(rng.choice(["", " ", "  "]) + core + rng.choice(["", " ", "\t"]))
+    frame = spark.createDataFrame([(k, o) for k, o in enumerate(orgs)],
+                                  "k int, orgUUID string")
+    got = {r.k: r.b for r in frame.select(
+        "k", DatasetsCatalog._bucket_expr().alias("b")).collect()}
+    assert got == {k: DatasetsCatalog._bucket_of(o) for k, o in enumerate(orgs)}
+
+
+def _null_entry(eid: str, **kw) -> dict:
+    return {**ENTRY, "id": eid, "storeType": None, **kw}
+
+
+@pytest.fixture(scope="module")
+def producer_base(spark, tmp_path_factory):
+    """A table of 6 entries plus one with a null isPublic and one with a
+    null orgUUID, committed with the Spark writer (the public write path
+    rejects both nulls)."""
+    from pyspark.sql import types as T
+
+    from data_catalog_spark.schema import COLUMN_ORDER, DATASETS_SCHEMA
+
+    path = str(tmp_path_factory.mktemp("producers") / "cat")
+    cat = DatasetsCatalog(spark, path)
+    cat.create_if_not_exists()
+    nullable = T.StructType([T.StructField(f.name, f.dataType, True)
+                             for f in DATASETS_SCHEMA.fields])
+    rows = [{**_cell_entry(k, k), "id": f"e{k}", "storeType": None} for k in range(6)]
+    rows += [_null_entry("np", isPublic=None), _null_entry("no", orgUUID=None)]
+    post = spark.createDataFrame([[r[c] for c in COLUMN_ORDER] for r in rows], nullable)
+    cat._commit(post, expected_version=cat._latest_version())
+    return path
+
+
+_PRODUCER_IDS = [f"e{k}" for k in range(8)] + ["np", "no"]
+_PRODUCER_OPS = st.lists(
+    st.tuples(st.sampled_from(["upsert", "patch", "delete", "public", "org"]),
+              st.sampled_from(_PRODUCER_IDS), st.integers(0, 5)),
+    min_size=1, max_size=4)
+
+
+def _apply(cat: DatasetsCatalog, op: str, eid: str, w: int):
+    """Run one write; its return value or the class of error it raised."""
+    try:
+        if op == "upsert":
+            return cat.upsert(eid, _cell_entry(int(eid[1:]) if eid[1:].isdigit() else w, w))
+        if op == "patch":
+            return cat.partial_update(eid, {"title": f"{_WORDS[w % 4]} patched"})
+        if op == "delete":
+            return cat.delete(eid)
+        if op == "public":
+            return cat.partial_update(eid, {"isPublic": not cat.get(eid)["isPublic"]})
+        return cat.partial_update(eid, {"orgUUID": f"org0{w % 3 + 1}"})
+    except EntryNotFoundError:
+        return "not found"
+    except ValueError:  # a stored null in a non-nullable column
+        return "null"
+
+
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(ops=_PRODUCER_OPS)
+@example(ops=[("patch", "no", 0), ("public", "np", 0), ("org", "no", 1), ("delete", "e2", 0)])
+def test_arrow_and_spark_producers_agree(spark, producer_base, tmp_path, ops):
+    """The same writes (upserts, patches, deletes, isPublic and orgUUID
+    flips, on entries with a null isPublic or orgUUID too) through the
+    Arrow producer and through the Spark writer (``PIN_MAX_BYTES = -1`` on
+    the instance) return the same, and after every step leave equal
+    ``df()`` rows, equal manifest cells, and equal served search, count
+    and GET answers in three caller scopes, read from the Arrow catalog's
+    own slot and by fresh instances from both tables' files."""
+    import shutil
+    import uuid
+
+    arrow_path, spark_path = (str(tmp_path / uuid.uuid4().hex) for _ in range(2))
+    shutil.copytree(producer_base, arrow_path)
+    shutil.copytree(producer_base, spark_path)
+    arrow = DatasetsCatalog(spark, arrow_path)
+    forced = DatasetsCatalog(spark, spark_path)
+    forced.PIN_MAX_BYTES = -1
+    readers = [DatasetsCatalog(spark, arrow_path), DatasetsCatalog(spark, spark_path)]
+    arrow.snapshot()
+    for op, eid, w in ops:
+        got = _apply(arrow, op, eid, w)
+        assert got == _apply(forced, op, eid, w), (op, eid, w)
+        assert forced.snapshot() is None
+        assert sorted(map(tuple, arrow.df().collect()), key=str) == sorted(
+            map(tuple, forced.df().collect()), key=str), (op, eid, w)
+        assert set(arrow._manifest(arrow._latest_version())) == set(
+            forced._manifest(forced._latest_version())), (op, eid, w)
+        want = _cell_answers(arrow.snapshot(), _PRODUCER_IDS)
+        for reader in readers:
+            assert _cell_answers(reader.snapshot(), _PRODUCER_IDS) == want, (op, eid, w)
+
+
+@pytest.mark.parametrize("fail_at", ["lock", "repoint"])
+def test_interrupted_arrow_commit_publishes_nothing(spark, tmp_path, monkeypatch, fail_at):
+    """A failure after the pyarrow payload is written and before the
+    VERSION repoint (the lock is not acquired, or it was broken while the
+    commit held it) leaves VERSION and the served answers on the old
+    version, no tmp payload dir, and none of the unpublished cells in the
+    serving slot; the next commit publishes normally."""
+    import contextlib
+    import os
+
+    import pyarrow.parquet as pq
+
+    from data_catalog_spark.errors import CommitConflictError
+
+    path = str(tmp_path / fail_at)
+    _pin_fixture(spark, path)
+    cat = DatasetsCatalog(spark, path)
+    base = cat._latest_version()
+    count = cat.count()
+    written = []
+    real_write = pq.write_table
+    monkeypatch.setattr(pq, "write_table",
+                        lambda t, where, **kw: (written.append(where), real_write(t, where, **kw)))
+    real_lock = cat._commit_lock
+
+    @contextlib.contextmanager
+    def failing_lock(timeout=30.0):
+        if fail_at == "lock":
+            raise CommitConflictError(f"commit lock held past {timeout}s")
+        with real_lock(timeout) as lk:
+            def broken():
+                raise CommitConflictError("commit lock was broken mid-section")
+            lk.assert_held = broken
+            yield lk
+
+    cat._commit_lock = failing_lock
+    with pytest.raises(CommitConflictError):
+        cat.upsert("lost", {**ENTRY, "title": "never published"})
+    assert written
+    assert cat._latest_version() == base
+    assert cat.count() == count
+    with pytest.raises(EntryNotFoundError):
+        cat.get("lost")
+    assert all(s.startswith("v") for s in os.listdir(os.path.join(path, "snapshots")))
+    assert {ckey[0] for ckey in cat._slot.cells} <= set(cat._manifest(base).values())
+    cat._commit_lock = real_lock
+    assert cat.upsert("kept", {**ENTRY, "title": "published"}) is True
+    assert cat.count() == count + 1 and cat.get("kept")["title"] == "published"
+    assert {r.id for r in cat.df().collect()} == {f"e{i}" for i in range(12)} | {"kept"}
+
+
+def test_service_writes_and_next_reads_run_no_job_and_open_no_parquet(
+        spark, tmp_path, monkeypatch):
+    """A one-entry PUT, POST and DELETE through the service, each followed
+    by a search, a count and a GET, run no Spark job and open no parquet
+    file: the commit wrote its cells with pyarrow and filed them in the
+    serving slot, so the touched cells' ``CellIndex`` in the next version
+    are the objects the commit built."""
+    import pyarrow.parquet as pq
+
+    from data_catalog_spark.query import DataSetFiltering
+    from data_catalog_spark.service import DataCatalogService
+
+    path = str(tmp_path / "writes")
+    _pin_fixture(spark, path)
+    svc = DataCatalogService(DatasetsCatalog(spark, path))
+    cat = svc.catalog
+    mode = DataSetFiltering.PRIVATE_AND_PUBLIC
+    total = svc.search({"query": "great"}, ["org01"], mode)[0]["total"]
+    opened, built = [], []
+    real_file = pq.ParquetFile
+    monkeypatch.setattr(pq, "ParquetFile",
+                        lambda *a, **kw: (opened.append(a), real_file(*a, **kw))[1])
+    real_post = cat._cell_post_images
+
+    def post_images(*a):
+        post, gone = real_post(*a)
+        built.extend(cell for table, cell in post.values() if table.num_rows)
+        return post, gone
+
+    monkeypatch.setattr(cat, "_cell_post_images", post_images)
+    body = {**ENTRY, "title": "a great new title", "orgUUID": "org01"}
+    steps = [
+        (lambda: svc.put_entry("new", body, ["org01"], False), (None, 201), total + 1),
+        (lambda: svc.post_entry("new", {"isPublic": False}, ["org01"], False),
+         (None, 200), total + 1),
+        (lambda: svc.delete_entry("new", ["org01"], False, token="t")[1], 200, total),
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("driver-writes", "writes and the reads after them")
+    try:
+        for write, reply, hits in steps:
+            built.clear()
+            assert write() == reply
+            assert svc.search({"query": "great"}, ["org01"], mode)[0]["total"] == hits
+            assert svc.count([], mode, True)[0]["total"] == hits - total + 12
+            found = svc.get_entry("new", [], True)[1]
+            assert found == (200 if hits > total else 404)
+            version = cat._latest_version()
+            fresh = [cell for (owner, _, _), (_, cell) in cat._slot.cells.items()
+                     if owner == version]
+            assert fresh and len(fresh) == len(built)
+            assert all(any(c is b for b in built) for c in fresh)
+            assert all(any(c is s for s in cat.snapshot().cells) for c in fresh)
+        assert opened == []
+        assert sc.statusTracker().getJobIdsForGroup("driver-writes") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_arrow_commit_refuses_rows_of_another_cell(spark, tmp_path):
+    """The Arrow producer's always-on twin of the ``stray`` check: a
+    post-image holding a row whose isPublic and orgUUID name another cell
+    fails the commit before anything is published."""
+    import os
+
+    import pyarrow as pa
+
+    from data_catalog_spark.catalog import ARROW_SCHEMA
+    from data_catalog_spark.search import CellIndex
+
+    path = str(tmp_path / "stray")
+    _pin_fixture(spark, path)
+    cat = DatasetsCatalog(spark, path)
+    base = cat._latest_version()
+    row = {**transform_entry({**ENTRY, "orgUUID": "org01"}), "id": "wrong"}
+    table = pa.Table.from_pylist([row], schema=ARROW_SCHEMA)
+    cell = cat._pkey(not row["isPublic"], cat._bucket_of("org01"))
+    with pytest.raises(AssertionError, match="encoding drift"):
+        cat._commit({cell: (table, CellIndex.build(table))},
+                    touched={cat._cell_tuple(cell)}, expected_version=base)
+    assert cat._latest_version() == base
+    assert all(s.startswith("v") for s in os.listdir(os.path.join(path, "snapshots")))
+    with pytest.raises(EntryNotFoundError):
+        cat.get("wrong")
+
+
+def test_batch_past_the_bound_commits_through_spark(spark, tmp_path):
+    """The Arrow producer runs only while the base's parquet bytes plus
+    the batch's Arrow bytes stay within ``PIN_MAX_BYTES``: a batch that
+    would carry a small table past the bound commits through the Spark
+    writer, and the serving slot never holds cells above the bound; a
+    batch within it still commits from the driver."""
+    import hashlib
+
+    path = str(tmp_path / "past")
+    _pin_fixture(spark, path)
+    cat = DatasetsCatalog(spark, path)
+    assert cat.snapshot() is not None
+    cat.PIN_MAX_BYTES = cat._slot.nbytes + 4000
+    producers, held = [], []
+    real_frame, real_cells, real_publish = cat._write_frame, cat._write_cells, cat._publish
+
+    def publish(tmp, base, version, manifest):
+        # the bytes of the cells the slot holds for the version published
+        held.append(sum(s[3] for (owner, cell, stats) in cat._slot.cells
+                        if manifest.get(cell) == owner for s in stats))
+        return real_publish(tmp, base, version, manifest)
+
+    cat._write_frame = lambda *a: (producers.append("spark"), real_frame(*a))[1]
+    cat._write_cells = lambda *a: (producers.append("arrow"), real_cells(*a))[1]
+    cat._publish = publish
+    assert cat.upsert("small", {**ENTRY, "title": "one more"}) is True
+    assert producers == ["arrow"]
+    # hex digests: titles parquet cannot compress below the bound either
+    big = [(f"b{i}", {**ENTRY, "title": f"bulk {i} " + "".join(
+        hashlib.sha256(f"{i}.{j}".encode()).hexdigest() for j in range(4))})
+           for i in range(40)]
+    assert len(cat.bulk_upsert(big)[0]) == 40
+    assert producers == ["arrow", "spark"]
+    assert len(held) == 2 and all(n <= cat.PIN_MAX_BYTES for n in held)
+    assert cat.snapshot() is None and cat._slot.cells == {}
+    assert cat.count() == 12 + 1 + 40
+    assert cat.get("b39")["title"].startswith("bulk 39 ")
