@@ -63,7 +63,8 @@ snapshot applies only to tables of at most ``PIN_MAX_BYTES`` parquet bytes
 (a bound on the driver memory it costs); a larger table and the
 legacy-snapshot path are served by the Spark plan over ``df()``.
 ``df()`` itself is always the union of scans: the Spark write lane, time
-travel, ``IndexedCatalog`` and registry entries read it.
+travel, indexed search (``text_index.catalog_hits``, whose postings live
+beside each cell's files) and registry entries read it.
 
 Scale notes (100 TB ingestion): mutations are expressed as *batch merges*
 (remove the matched ids, add the batch), never per-row loops —
@@ -283,22 +284,29 @@ class DatasetsCatalog:
         """Drop all but the newest ``keep_last`` snapshots — EXCEPT any
         older snapshot a retained manifest still references for an
         untouched partition (file-granular commits make old snapshots
-        live data, so retention must chase the manifest graph); never the
-        current one.  Returns the versions removed."""
+        live data, so retention must chase the manifest graph).  The
+        current version, every version at or above it (a commit between
+        its move and its manifest write, or its orphan) and every owner
+        the current manifest names are always kept.  The victims are
+        chosen under the commit lock, so no commit publishes in between,
+        and removed after it, so writers never wait on an ``rmtree``; a
+        removed snapshot takes its cells' postings sidecars with it.
+        Returns the versions removed."""
         keep_last = max(1, keep_last)
-        vs = self.versions()
-        current = self._latest_version()
-        kept = vs[-keep_last:] if len(vs) > keep_last else vs
-        referenced: set[int] = set()
-        for v in kept:
-            referenced.update((self._manifest(v) or {}).values())
-        removed = []
-        for v in vs[:-keep_last] if len(vs) > keep_last else []:
-            if v == current or v in referenced:
-                continue
+        if not os.path.isdir(self.path):  # a dropped table: no lock file dir
+            return []
+        with self._commit_lock():
+            vs = self.versions()
+            current = self._latest_version()
+            kept = set(vs[-keep_last:])
+            if current is not None:
+                kept |= {v for v in vs if v >= current}
+            for v in list(kept):
+                kept |= set((self._manifest(v) or {}).values())
+            victims = [v for v in vs if v not in kept]
+        for v in victims:
             shutil.rmtree(self._snapshot_dir(v), ignore_errors=True)
-            removed.append(v)
-        return removed
+        return victims
 
     @staticmethod
     def _cell_tuple(cell: str) -> tuple[bool | None, int]:
@@ -1017,7 +1025,6 @@ class DatasetsCatalog:
         ).first()
         n_valid = int(n_valid or 0)
         if n_valid == 0:
-            self._last_merged_rows = None  # nothing committed this batch
             return 0, int(n_total)
         now_iso = datetime.now().isoformat(timespec="seconds")
         # creationTime is the one OPTIONAL writable field — a batch may
@@ -1048,12 +1055,6 @@ class DatasetsCatalog:
         )
 
         self._retry_lost_race(lambda: self._merge_batch(post))
-        # stash the committed batch rows for composite writers: under
-        # whole-row replacement ``post`` IS the committed content for every
-        # merged id, so an index layered on this catalog can reindex from
-        # the (checkpoint-backed, batch-sized) frame instead of re-scanning
-        # the bucketed table it just wrote (IndexedCatalog.bulk_upsert_df)
-        self._last_merged_rows = post
         return n_valid, int(n_total) - n_valid
 
     def _merge_batch(self, post: DataFrame) -> None:

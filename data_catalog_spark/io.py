@@ -172,14 +172,15 @@ _PROC_SCRATCH = None
 
 def link_tree(src: str, dst: str) -> None:
     """Populate a scratch copy of a write-once materialized directory via
-    HARDLINKS instead of byte copies — the seeded catalog/index trees are
-    hundreds of small files, and per-invocation copytree was pure syscall
-    + page-cache churn on the benchmarked write paths.  Safe because the
+    HARDLINKS instead of byte copies — a seeded catalog tree is hundreds
+    of small files, and per-invocation copytree was pure syscall +
+    page-cache churn on the benchmarked write paths.  Safe because the
     layouts linked here are append-only: catalog commits write NEW
-    snapshot dirs, index appends write NEW segment dirs, and the only
-    mutable files (MANIFEST.json, the version pointer) are replaced via
-    write-temp + atomic rename — a fresh inode, so the linked cache bytes
-    are never rewritten through the scratch tree (deletes merely unlink).
+    snapshot dirs, a cell's postings sidecar is a NEW dir renamed into
+    place, and the only mutable file (the version pointer) is replaced
+    via write-temp + atomic rename — a fresh inode, so the linked cache
+    bytes are never rewritten through the scratch tree (deletes merely
+    unlink).
     Falls back to a real copy per file when linking is unsupported (e.g.
     a cross-device scratch dir)."""
     import os

@@ -159,7 +159,7 @@ register("catalog_cdc_diff", catalog_cdc_diff, _cdc_oracle())
 
 # -- time-travel search: snapshot isolation, oracle-checkable --------------------
 #
-# `hits_at` (indexed_catalog.py) has been pytest-pinned since round 5;
+# Search at an older version (text_index.catalog_hits) is pytest-pinned;
 # this registers the semantics through the gate: run the SAME mutating
 # batch as catalog_cdc_diff, then evaluate a match-all ONLY_PUBLIC search
 # AS OF the pre-batch snapshot.  The oracle is the hits page over the

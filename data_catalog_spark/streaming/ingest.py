@@ -1,22 +1,23 @@
 """Streaming ingest → searchable index, end-to-end (the ES write path).
 
-The IndexedCatalog keeps the versioned catalog table and the postings
-index in lockstep (indexed_catalog.py); this module registers the full
-write-path pipeline as a benchmarked, oracle-checked query so its cost is
-tracked round-over-round like the read path:
+The catalog's text index is derived from its own committed cells: each
+cell's postings sidecar is built on the first indexed read that needs it
+(text_index.catalog_hits), so search can never lag a commit.  This module
+registers the full write-path pipeline as a benchmarked, oracle-checked
+query so its cost is tracked round-over-round like the read path:
 
 1. seed a fresh catalog with a deterministic slice of the derived
-   ``datasets`` corpus and build the index (``resync``) — built ONCE per
-   sf_dir content under the io.materialization_path cache and copied into
-   each run's scratch dirs, so the measured cost is the write path, not
-   the fixed scaffolding,
+   ``datasets`` corpus and build every seed cell's sidecar — built ONCE
+   per sf_dir content under the io.materialization_path cache and linked
+   into each run's scratch dir, so the measured cost is the write path,
+   not the fixed scaffolding,
 2. replay one micro-batch of NEW entries from a JSONL drop directory
-   through ``foreachBatch`` → ``IndexedCatalog.bulk_upsert_df`` (the
+   through ``foreachBatch`` → ``DatasetsCatalog.bulk_upsert_df`` (the
    DataFrame-native merge: validation as column predicates, rejects
-   counted, no driver materialization of the batch — table merge +
-   incremental index segment, read-your-writes),
+   counted, no driver materialization of the batch),
 3. run an indexed search for a marker token only the streamed entries
-   contain and return the hits page.
+   contain and return the hits page; it builds the sidecars of the cells
+   the batch rewrote.
 
 The DuckDB oracle reuses the sqlgen machinery: the expected table is the
 same seed CTE UNION ALL the planted rows as literals, compiled through
@@ -25,12 +26,13 @@ search, and the streamed end-state (reference parity:
 elastic_search.py's index-on-write contract).
 
 Scale: the seed is a FIXED 512 entries at every SF — this query measures
-the per-micro-batch write cost (validation, merge commit, index segment
-append, postings probe), which at deployment is independent of corpus
-size by design (merge plans are batch-bounded, catalog.py:bulk_upsert_df;
-index appends are segment-local, text_index.py).  The foreachBatch body
-never collects the batch: validation/merge/indexing stay DataFrame plans
-end to end."""
+the per-micro-batch write cost (validation, merge commit, postings of the
+touched cells, postings probe), which at deployment is independent of
+corpus size by design (merge plans are batch-bounded,
+catalog.py:bulk_upsert_df; a commit rewrites, and a read then indexes,
+only the cells the batch touched, text_index.cell_postings).  The
+foreachBatch body never collects the batch: validation, merge and
+indexing stay DataFrame plans end to end."""
 
 from __future__ import annotations
 
@@ -44,12 +46,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import DatasetsCatalog
 from ..datasets_source import DATASETS_FROM_PART_SQL, datasets_df
-from ..indexed_catalog import IndexedCatalog
 from ..io import ensure_materialized, link_tree, materialization_path
 from ..operators.registry import register
 from ..query import DataSetFiltering, compile_query
 from ..query import sqlgen
 from ..schema import COLUMN_ORDER
+from ..text_index import catalog_hits, cell_postings
 
 SEED_N = 512
 BATCH_N = 64
@@ -108,10 +110,10 @@ def _search_cq():
 
 
 # Scratch dirs of the PREVIOUS invocation, reclaimed on the next call (the
-# returned hits page lazily reads the catalog table + index, so they must
-# outlive the call itself — but a benchmark loop must not leak one
-# table+index+checkpoint set per iteration) and swept at interpreter exit
-# so the FINAL invocation's dirs don't outlive the process.  Serial
+# returned hits page lazily reads the catalog table and its postings
+# sidecars, so they must outlive the call itself — but a benchmark loop
+# must not leak one table+checkpoint set per iteration) and swept at
+# interpreter exit so the FINAL invocation's dirs don't outlive the process.  Serial
 # invocation within one process is assumed — the same contract as the
 # catalog's per-path mutation lock.
 _PREV_RUN_DIRS: list[str] = []
@@ -121,22 +123,23 @@ atexit.register(
 
 
 def _seed_cache(spark: SparkSession, sf_dir: str) -> str:
-    """Build the 512-entry seeded catalog + postings index ONCE per sf_dir
-    content (io.materialization_path keys on the part.parquet stat, the
-    datasets corpus' source) and cache the pair; each query invocation
-    copies the finished directories instead of re-deriving + re-indexing
-    the seed, so the benchmarked cost is the micro-batch write path."""
-    # "-l1": seed layout version — bumped when the catalog's commit file
-    # layout changes (r11: cell-bin-packed commits), so stale many-small-
-    # file seed artifacts rebuild instead of being linked forward forever
+    """Build the 512-entry seeded catalog, with every cell's postings
+    sidecar, ONCE per sf_dir content (io.materialization_path keys on the
+    part.parquet stat, the datasets corpus' source) and cache it; each
+    query invocation links the finished table instead of re-deriving and
+    re-indexing the seed, so the benchmarked cost is the micro-batch write
+    path."""
+    # "-l2": seed layout version — bumped when the cached layout changes
+    # (l1: cell-bin-packed commits; l2: postings sidecars inside the cells
+    # instead of a separate index/ tree), so a stale seed artifact is
+    # rebuilt instead of being linked forward forever
     path = materialization_path(
-        sf_dir, f"ingest-seed-{SEED_N}-l1", "part.parquet"
+        sf_dir, f"ingest-seed-{SEED_N}-l2", "part.parquet"
     )
 
     def build(tmp: str) -> None:
         os.makedirs(tmp, exist_ok=True)
         cat = DatasetsCatalog(spark, os.path.join(tmp, "table"))
-        ic = IndexedCatalog(cat, os.path.join(tmp, "index"))
         seed = [
             (r["id"], _entry_of(r))
             for r in (
@@ -147,7 +150,7 @@ def _seed_cache(spark: SparkSession, sf_dir: str) -> str:
             )
         ]
         cat.bulk_upsert(seed)
-        ic.resync()
+        cell_postings(cat, cat._latest_version())
         open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     return ensure_materialized(path, build)
@@ -157,23 +160,20 @@ def stream_ingest_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     while _PREV_RUN_DIRS:
         shutil.rmtree(_PREV_RUN_DIRS.pop(), ignore_errors=True)
     tbl = tempfile.mkdtemp(prefix="ingest-tbl-")
-    idx = tempfile.mkdtemp(prefix="ingest-idx-")
     src = tempfile.mkdtemp(prefix="ingest-src-")
     ckpt = tempfile.mkdtemp(prefix="ingest-ckpt-")
-    _PREV_RUN_DIRS.extend([tbl, idx, src, ckpt])
+    _PREV_RUN_DIRS.extend([tbl, src, ckpt])
 
     seeded = _seed_cache(spark, sf_dir)
     link_tree(os.path.join(seeded, "table"), tbl)
-    link_tree(os.path.join(seeded, "index"), idx)
     cat = DatasetsCatalog(spark, tbl)
-    ic = IndexedCatalog(cat, idx)
 
     with open(os.path.join(src, "batch-0.jsonl"), "w") as f:
         for row in _planted_rows():
             f.write(json.dumps(row) + "\n")
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        ic.bulk_upsert_df(batch_df)
+        cat.bulk_upsert_df(batch_df)
 
     q = (
         spark.readStream.schema(_STREAM_SCHEMA)
@@ -184,7 +184,7 @@ def stream_ingest_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return ic.hits(_search_cq())
+    return catalog_hits(cat, _search_cq())
 
 
 def _ingest_oracle() -> str:
@@ -319,9 +319,9 @@ def stream_ingest_rejects(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     seeded = _seed_cache(spark, sf_dir)
     link_tree(os.path.join(seeded, "table"), tbl)
-    # plain catalog, no index: this query's contract is the VALIDATION
-    # lane + merge visibility; the index-in-lockstep write path is the
-    # separately benchmarked stream_ingest_indexed_search
+    # no search: this query's contract is the VALIDATION lane + merge
+    # visibility; the indexed-search write path is the separately
+    # benchmarked stream_ingest_indexed_search
     cat = DatasetsCatalog(spark, tbl)
 
     with open(os.path.join(src, "batch-0.jsonl"), "w") as f:

@@ -1,9 +1,10 @@
-"""Dump .explain('formatted') for named bench entries to plans/r12/.
+"""Dump .explain('formatted') for named bench entries to plans/<round>/.
 
-Usage: python scripts/dump_r12_plans.py <before|after> name1 name2 ...
-       python scripts/dump_r12_plans.py <before|after> --slowest=35
-Evidence files for OPTIMIZATION_r12.md (the judge checks plan claims
-against these).  sf dir: $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1.
+Usage: python scripts/dump_round_plans.py <round> <before|after> name1 name2 ...
+       python scripts/dump_round_plans.py <round> <before|after> --slowest=35
+<round> names the output dir (e.g. r12 → plans/r12/); the files are the
+plan evidence of that round's OPTIMIZATION_<round>.md.  sf dir:
+$SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1.
 """
 
 from __future__ import annotations
@@ -18,11 +19,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    assert suffix in ("before", "after"), "first arg must be before|after"
+    round_name, suffix = sys.argv[1], sys.argv[2]
+    assert suffix in ("before", "after"), "second arg must be before|after"
     names: list[str] = []
     slowest = 0
-    for a in sys.argv[2:]:
+    for a in sys.argv[3:]:
         if a.startswith("--slowest="):
             slowest = int(a.split("=", 1)[1])
         else:
@@ -33,10 +34,10 @@ def main() -> None:
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    outdir = os.path.join(here, "plans", "r12")
+    outdir = os.path.join(here, "plans", round_name)
     os.makedirs(outdir, exist_ok=True)
 
-    spark = get_spark(app_name=f"plans-r12-{suffix}")
+    spark = get_spark(app_name=f"plans-{round_name}-{suffix}")
     spark.sparkContext.setLogLevel("ERROR")
     qs = e.queries()
     if slowest:

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 
 from data_catalog_spark.catalog import DatasetsCatalog
 from data_catalog_spark.errors import InvalidEntryError
-from data_catalog_spark.indexed_catalog import IndexedCatalog
 from data_catalog_spark.schema import validate_target_uri
+from data_catalog_spark.text_index import catalog_hits
 
 STREAM_SCHEMA = (
     "id string, title string, category string, dataSample string, "
@@ -197,18 +197,16 @@ def test_uri_predicate_matches_python_validator(spark, cat):
     assert got == expected_ok
 
 
-def test_indexed_bulk_upsert_df_searchable(spark, cat, tmp_path):
-    ic = IndexedCatalog(cat, str(tmp_path / "index"))
-    ic.resync()
+def test_indexed_bulk_upsert_df_searchable(spark, cat):
     marker_row = {**ROW, "title": "zanzibar quarterly report"}
-    n_ok, n_rej = ic.bulk_upsert_df(_df(spark, [marker_row]))
+    n_ok, n_rej = cat.bulk_upsert_df(_df(spark, [marker_row]))
     assert (n_ok, n_rej) == (1, 0)
     from data_catalog_spark.query import DataSetFiltering, compile_query
 
     cq = compile_query(
         {"query": "zanzibar", "size": 10}, [], DataSetFiltering.ONLY_PUBLIC, False
     )
-    hits = ic.hits(cq).collect()
+    hits = catalog_hits(cat, cq).collect()
     assert [h["id"] for h in hits] == ["e1"]
 
 

@@ -1,6 +1,8 @@
 """Inverted text index: exact equivalence to the scan-based search path on
 every text-bearing catalog case, candidate-superset property, short-query
-fallback, and the posting-probe plan shape."""
+fallback, the posting-probe plan shape, and the live catalog's per-cell
+postings sidecars (built with no driver collect, under racing builders
+and beside a crashed commit)."""
 
 from __future__ import annotations
 
@@ -297,359 +299,136 @@ def test_ensure_materialized_build_failure_cleans_and_raises(tmp_path):
     assert [d for d in os.listdir(tmp_path) if ".build-" in d] == []
 
 
-# -- incremental (segmented) index --------------------------------------------
+# -- the live catalog's per-cell sidecars ---------------------------------------
+
+ENTRY = {
+    "orgUUID": "org02",
+    "category": "health",
+    "dataSample": "alpha,beta",
+    "format": "csv",
+    "recordCount": 2,
+    "size": 10,
+    "sourceUri": "http://example.com/widget.csv",
+    "targetUri": "hdfs://h:8200/broker/x/abc/000000_1",
+    "title": "shiny widget metrics",
+    "isPublic": True,
+    "creationTime": "2015-02-13T13:00:00",
+}
 
 
-def _postings_set(df):
-    return {(r.field, r.gram, r.id) for r in df.collect()}
-
-
-def test_segmented_index_upsert_delete_compact(spark, sf_dir, tmp_path):
-    """Lucene-style incremental maintenance: an upsert batch becomes a new
-    segment and tombstones the old postings; reads see every write
-    immediately; compaction folds to one segment with identical content;
-    the final state equals a from-scratch rebuild."""
-    from pyspark.sql import functions as F
-
-    from data_catalog_spark.text_index import SegmentedTextIndex
-
-    ds = datasets_df(spark, sf_dir)
-    idx = SegmentedTextIndex(spark, str(tmp_path / "segidx"))
-    idx.rebuild(ds)
-    assert len(idx._segments()) == 1
-
-    # upsert: change one doc's title to a unique token
-    victim = ds.orderBy("id").limit(1).collect()[0]
-    changed = ds.where(F.col("id") == victim.id).withColumn(
-        "title", F.lit("zzzuniquetoken alpha")
-    )
-    idx.upsert(changed)
-    assert len(idx._segments()) == 2
-
-    live = idx.postings()
-    stem_hits = {
-        r.id
-        for r in live.where(
-            (F.col("field") == "title_stem") & (F.col("gram") == "zzzuniquetoken")
-        ).collect()
+def _entry(i):
+    return {
+        **ENTRY,
+        "title": f"widget {i} report",
+        "orgUUID": f"org0{i % 3 + 1}",
+        "isPublic": i % 2 == 0,
     }
-    assert stem_hits == {victim.id}
-    # the victim's OLD title postings are gone from the live view
-    old_first_token = victim.title.lower().split()[0]
-    old_ids = {
-        r.id
-        for r in live.where(
-            (F.col("field") == "title_stem") & F.col("id").isin([victim.id])
-        ).collect()
-    }
-    assert old_ids == {victim.id}  # only via the new segment's grams
-    # equivalence with a full rebuild over the updated corpus
-    updated = ds.where(F.col("id") != victim.id).unionByName(changed)
-    fresh = SegmentedTextIndex(spark, str(tmp_path / "fresh"))
-    fresh.rebuild(updated)
-    assert _postings_set(live) == _postings_set(fresh.postings())
-
-    # delete tombstones without rewriting data
-    idx.delete([victim.id])
-    assert victim.id not in {r.id for r in idx.postings().collect()}
-
-    # compact folds to one live-only segment, content unchanged
-    before = _postings_set(idx.postings())
-    assert idx.compact() == 1
-    assert _postings_set(idx.postings()) == before
 
 
-def test_segmented_index_serves_search(spark, sf_dir, tmp_path):
-    """indexed_hits over the live segmented view equals the scan path
-    AFTER a write — the ES contract (search is read-your-writes)."""
-    from pyspark.sql import functions as F
-
-    from data_catalog_spark import text_index as ti
-    from data_catalog_spark.query import DataSetFiltering, compile_query
-
-    ds = datasets_df(spark, sf_dir)
-    idx = ti.SegmentedTextIndex(spark, str(tmp_path / "live"))
-    idx.rebuild(ds)
-    victim = ds.orderBy("id").limit(1).collect()[0]
-    changed = ds.where(F.col("id") == victim.id).withColumn(
-        "title", F.lit("freshly indexed widget")
+def _widget_query():
+    return compile_query(
+        {"query": "widget", "size": 100}, [], DataSetFiltering.PRIVATE_AND_PUBLIC, True
     )
-    idx.upsert(changed)
-    updated = ds.where(F.col("id") != victim.id).unionByName(changed)
-    cq = compile_query(
-        {"query": "widget", "size": 25}, [], DataSetFiltering.ONLY_PUBLIC, False
-    )
-    want = [tuple(r) for r in search.hits(updated, cq).collect()]
-    got = [
-        tuple(r)
-        for r in ti.indexed_hits_df(spark, updated, idx.postings(), cq).collect()
-    ]
-    assert got == want
 
 
-def test_segmented_index_random_ops_equal_rebuild(spark, tmp_path):
-    """Property: after ANY sequence of upsert/delete batches, the live
-    postings equal a from-scratch rebuild over the logically-current
-    corpus — segments + tombstones are pure physical layout."""
-    import random
-
-    from data_catalog_spark.text_index import SegmentedTextIndex
-
-    rng = random.Random(7)
-    words = ["amber", "bolt", "crate", "delta", "ember", "flux", "widget"]
-
-    def phrase():
-        return " ".join(rng.choice(words) for _ in range(rng.randint(1, 4)))
-
-    state = {}
-
-    def df_of(ids):
-        rows = [(i, *state[i]) for i in ids]
-        return spark.createDataFrame(
-            rows, "id string, title string, dataSample string, sourceUri string"
-        )
-
-    idx = SegmentedTextIndex(spark, str(tmp_path / "rnd"))
-    idx.rebuild(df_of([]))
-    for step in range(6):
-        if state and rng.random() < 0.4:
-            victims = rng.sample(sorted(state), k=min(2, len(state)))
-            for i in victims:
-                state.pop(i)
-            idx.delete(victims)
-        else:
-            ids = sorted({str(rng.randrange(10)) for _ in range(rng.randint(1, 3))})
-            for i in ids:
-                w = rng.choice(words)
-                state[i] = (phrase(), phrase(), f"http://www.{w}.com/{w}")
-            idx.upsert(df_of(ids))
-        fresh = SegmentedTextIndex(spark, str(tmp_path / f"fresh{step}"))
-        fresh.rebuild(df_of(sorted(state)))
-        assert _postings_set(idx.postings()) == _postings_set(fresh.postings()), step
+def _assert_indexed_equals_scan(cat, version=None):
+    cq = _widget_query()
+    want = [tuple(r) for r in search.hits(cat.df(version), cq).collect()]
+    got = [tuple(r) for r in text_index.catalog_hits(cat, cq, version).collect()]
+    assert got == want and want
 
 
-def _mini_corpus(spark, rows):
-    return spark.createDataFrame(
-        rows, "id string, title string, dataSample string, sourceUri string"
-    )
+def _build_dirs(root):
+    import os
+
+    return [d for _, dirs, _ in os.walk(root) for d in dirs if ".build-" in d]
 
 
 def test_rebuild_and_compact_never_collect(spark, tmp_path, monkeypatch):
-    """The 100×-catalog claim, pinned: rebuild() and compact() must not
-    materialize ANY rows on the driver (r5 collected every id of a
-    rebuilt/merged segment).  DataFrame.collect is forbidden for the
-    duration of both calls."""
-    from pyspark.sql import DataFrame
+    """Building a version's cell sidecars, and compacting the catalog
+    whose new cells then need them, materialize no rows on the driver:
+    DataFrame.collect is forbidden for the duration of both."""
+    from data_catalog_spark.catalog import DatasetsCatalog
 
-    from data_catalog_spark.text_index import SegmentedTextIndex
-
-    idx = SegmentedTextIndex(spark, str(tmp_path / "nocollect"))
-    corpus = _mini_corpus(
-        spark,
-        [(str(i), f"widget {i}", f"sample {i}", f"http://x.com/{i}") for i in range(20)],
-    )
+    cat = DatasetsCatalog(spark, str(tmp_path / "tbl"))
+    cat.bulk_upsert([(str(i), _entry(i)) for i in range(20)])
 
     def _boom(self, *a, **k):
-        raise AssertionError("driver-side collect during rebuild/compact")
+        raise AssertionError("driver-side collect during a sidecar build/compact")
 
     with monkeypatch.context() as m:
-        m.setattr(DataFrame, "collect", _boom)
-        idx.rebuild(corpus)
-    idx.upsert(_mini_corpus(spark, [("3", "renamed gadget", "s", "http://x.com/3")]))
-    idx.delete(["5"])
-    with monkeypatch.context() as m:
-        m.setattr(DataFrame, "collect", _boom)
-        assert idx.compact() == 1
-    live = {r.id for r in idx.postings().select("id").distinct().collect()}
-    assert "5" not in live and "3" in live and len(live) == 19
-
-
-def test_tombstone_spill_applies_by_anti_join(spark, tmp_path, monkeypatch):
-    """Past TS_INLINE_MAX, per-segment tombstones live in parquet and are
-    applied by LEFT-ANTI JOIN — no isin literal list, no driver copy."""
-    from data_catalog_spark import text_index as ti
-
-    monkeypatch.setattr(ti, "TS_INLINE_MAX", 2)
-    idx = ti.SegmentedTextIndex(spark, str(tmp_path / "spill"))
-    idx.rebuild(
-        _mini_corpus(
-            spark,
-            [(str(i), f"doc {i}", "s", f"http://x.com/{i}") for i in range(10)],
-        )
-    )
-    idx.delete(["0", "1", "2", "3"])  # 4 > TS_INLINE_MAX=2 → spill
-    (rec,) = idx._manifest()
-    assert rec["ts_dir"] is not None and rec["ts_inline"] == []
-    live = idx.postings()
-    plan = live._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan
-    ids = {r.id for r in live.select("id").distinct().collect()}
-    assert ids == {str(i) for i in range(4, 10)}
-    # a later delete unions into the spilled set (new immutable snapshot)
-    old_ts = rec["ts_dir"]
-    idx.delete(["4"])
-    (rec2,) = idx._manifest()
-    assert rec2["ts_dir"] is not None and rec2["ts_dir"] != old_ts
-    ids = {r.id for r in idx.postings().select("id").distinct().collect()}
-    assert ids == {str(i) for i in range(5, 10)}
+        m.setattr(type(cat.df()), "collect", _boom)
+        text_index.cell_postings(cat, cat._latest_version())
+        assert cat.compact(max_files_per_cell=0)["compacted_cells"] == 6
+        text_index.cell_postings(cat, cat._latest_version())
+    _assert_indexed_equals_scan(cat)
 
 
 def test_concurrent_upserts_do_not_collide(spark, tmp_path):
-    """ADVICE r5: uuid segment names + the mutation lock mean concurrent
-    writers can never mint the same segment or lose a tombstone — the
-    final index equals a rebuild over the logical end state."""
+    """Concurrent writers, then concurrent first readers: four threads
+    upsert through their own catalog handles (a lost commit race retries
+    on the new base), then four threads search the same version at once,
+    racing to build each cell's missing sidecar.  Every write lands, one
+    build per cell is published, no build dir is left, and indexed hits
+    equal the scan."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from data_catalog_spark.text_index import SegmentedTextIndex
+    from data_catalog_spark.catalog import DatasetsCatalog
 
-    idx = SegmentedTextIndex(spark, str(tmp_path / "conc"))
-    idx.rebuild(
-        _mini_corpus(
-            spark, [(str(i), f"base {i}", "s", f"http://x.com/{i}") for i in range(8)]
-        )
-    )
+    path = str(tmp_path / "conc")
+    cat = DatasetsCatalog(spark, path)
+    cat.bulk_upsert([(str(i), _entry(i)) for i in range(8)])
 
     def writer(k):
-        # each thread rewrites its own doc AND doc k+4 (overlap across threads)
-        rows = [
-            (str(k), f"thread {k} fresh", "s", f"http://t.com/{k}"),
-            (str(k + 4), f"thread {k} also", "s", f"http://t.com/{k + 4}"),
-        ]
-        SegmentedTextIndex(spark.newSession(), str(tmp_path / "conc")).upsert(
-            _mini_corpus(spark, rows)
-        )
+        DatasetsCatalog(spark, path).upsert(f"t{k}", _entry(k))
+
+    def reader(_):
+        cq = _widget_query()
+        hits = text_index.catalog_hits(DatasetsCatalog(spark, path), cq)
+        return sorted(r.id for r in hits.collect())
 
     with ThreadPoolExecutor(max_workers=4) as ex:
         list(ex.map(writer, range(4)))
-
-    segs = idx._segments()
-    assert len(segs) == 5 and len(set(segs)) == 5  # no name collision
-    # every id appears in the live view exactly once per (field, gram):
-    # the overlapping upserts tombstoned each other in commit order, so
-    # each doc's postings come from exactly one segment
-    live = idx.postings().select("id", "field", "gram").collect()
-    assert len(live) == len(set(live))
-    assert {r.id for r in live} == {str(i) for i in range(8)}
+        answers = list(ex.map(reader, range(4)))
+    assert cat.count() == 12
+    assert answers == [sorted([str(i) for i in range(8)] + [f"t{k}" for k in range(4)])] * 4
+    assert _build_dirs(path) == []
+    _assert_indexed_equals_scan(cat)
 
 
 def test_crash_before_manifest_swap_leaves_index_readable(spark, tmp_path, monkeypatch):
-    """Every mutation commits via ONE atomic manifest replace: a crash
-    after the data writes but before the swap leaves the previous
-    generation fully readable (stale, never broken), and the next
-    mutation succeeds normally.  Covers ADVICE r5's non-atomic-compact
-    finding — there is no window where the index dir is missing."""
-    from data_catalog_spark.text_index import SegmentedTextIndex
+    """The catalog's manifest write and VERSION repoint are the index's
+    only commit: a commit that crashes after moving its snapshot dir but
+    before writing its manifest leaves the previous version readable and
+    searchable, the orphan dir gets no sidecar, and the next commit
+    succeeds and is searchable at once."""
+    import json
+    import os
 
-    idx = SegmentedTextIndex(spark, str(tmp_path / "crash"))
-    idx.rebuild(
-        _mini_corpus(
-            spark, [(str(i), f"doc {i}", "s", f"http://x.com/{i}") for i in range(6)]
-        )
-    )
-    idx.delete(["0"])
-    before = {
-        (r.field, r.gram, r.id) for r in idx.postings().collect()
-    }
+    import pytest
 
-    def crash(self, segments):
-        raise OSError("simulated crash before manifest swap")
+    from data_catalog_spark.catalog import DatasetsCatalog
+
+    cat = DatasetsCatalog(spark, str(tmp_path / "crash"))
+    cat.bulk_upsert([(str(i), _entry(i)) for i in range(6)])
+    _assert_indexed_equals_scan(cat)
+    before = cat._latest_version()
+
+    def crash(*a, **k):
+        raise OSError("simulated crash before the manifest write")
 
     with monkeypatch.context() as m:
-        m.setattr(SegmentedTextIndex, "_write_manifest", crash)
-        import pytest as _pytest
+        m.setattr(json, "dump", crash)
+        with pytest.raises(OSError):
+            cat.upsert("new", _entry(6))
+    orphan = cat._snapshot_dir(before + 1)
+    assert cat._latest_version() == before and os.path.isdir(orphan)
+    _assert_indexed_equals_scan(cat)
+    assert "new" not in {r.id for r in cat.df().collect()}
+    assert not [d for _, dirs, _ in os.walk(orphan) for d in dirs if d == "_postings"]
 
-        with _pytest.raises(OSError):
-            idx.compact()
-        with _pytest.raises(OSError):
-            idx.upsert(_mini_corpus(spark, [("9", "new", "s", "http://x.com/9")]))
-    # previous generation intact — including on a FRESH handle (constructor
-    # must not resurrect an empty index)
-    again = SegmentedTextIndex(spark, str(tmp_path / "crash"))
-    assert {(r.field, r.gram, r.id) for r in again.postings().collect()} == before
-    # and the chain is not wedged: the next compact commits and sweeps orphans
-    assert again.compact() == 1
-    assert {(r.field, r.gram, r.id) for r in again.postings().collect()} == before
-    import os
-
-    leftover = [d for d in os.listdir(tmp_path / "crash") if d.startswith("seg-")]
-    assert len(leftover) == 1
-
-
-def test_lock_heartbeat_and_assert_held(spark, tmp_path):
-    """A live holder can refresh the lock mtime mid-section; a holder
-    whose lock was broken (token replaced) aborts before the manifest
-    swap instead of clobbering the successor."""
-    import os
-    import time
-
-    import pytest
-
-    from data_catalog_spark.text_index import IndexLockError, SegmentedTextIndex
-
-    idx = SegmentedTextIndex(spark, str(tmp_path / "ix"))
-    lock = os.path.join(idx.path, ".INDEX_LOCK")
-    with idx._mutation_lock() as lk:
-        lk.assert_held()  # fresh lock is ours
-        old = os.path.getmtime(lock)
-        time.sleep(0.05)
-        lk.heartbeat()
-        assert os.path.getmtime(lock) >= old
-        # simulate a waiter breaking the stale lock and reacquiring
-        with open(lock, "w") as f:
-            f.write("someone-else")
-        with pytest.raises(IndexLockError):
-            lk.assert_held()
-        lk.heartbeat()  # must NOT touch the successor's lock
-        with open(lock) as f:
-            assert f.read() == "someone-else"
-    # release must leave the successor's lock in place
-    assert os.path.exists(lock)
-    os.unlink(lock)
-
-
-def test_pre_manifest_layout_raises_not_empty(spark, tmp_path):
-    """seg-* dirs without MANIFEST.json (older on-disk layout or torn
-    state) must surface, not read as an empty index whose next mutation
-    sweeps the old segments away."""
-    import os
-
-    import pytest
-
-    from data_catalog_spark.text_index import IndexCorruptError, SegmentedTextIndex
-
-    path = str(tmp_path / "oldix")
-    os.makedirs(os.path.join(path, "seg-000"))
-    idx = SegmentedTextIndex(spark, path)
-    with pytest.raises(IndexCorruptError):
-        idx.postings()
-
-
-def test_reader_racing_first_build_sees_empty_not_corrupt(spark, tmp_path):
-    """Construction seeds an empty manifest, so stray seg dirs from an
-    in-progress (or crashed) FIRST build read as an empty index — the
-    corrupt guard is reserved for true pre-manifest legacy layouts."""
-    import os
-
-    from data_catalog_spark.text_index import SegmentedTextIndex
-
-    idx = SegmentedTextIndex(spark, str(tmp_path / "ix"))
-    os.makedirs(os.path.join(idx.path, "seg-inprogress"))
-    assert idx.postings().count() == 0  # readable empty, no raise
-
-
-def test_lock_ticker_keeps_live_holder_fresh(spark, tmp_path, monkeypatch):
-    """A holder mid-way through one long job (no heartbeat() call sites)
-    must never go stale: the daemon ticker refreshes the lock mtime."""
-    import os
-    import time
-
-    from data_catalog_spark import text_index as ti
-
-    monkeypatch.setattr(ti, "LOCK_STALE_AFTER", 0.4)
-    idx = ti.SegmentedTextIndex(spark, str(tmp_path / "ix"))
-    lock = os.path.join(idx.path, ".INDEX_LOCK")
-    with idx._mutation_lock() as lk:
-        time.sleep(1.2)  # 3x the stale threshold, no explicit heartbeat
-        assert time.time() - os.path.getmtime(lock) < 0.4
-        lk.assert_held()  # still ours
-    assert not os.path.exists(lock)
+    cat.upsert("new", _entry(6))
+    assert "new" in {
+        r.id for r in text_index.catalog_hits(cat, _widget_query()).collect()
+    }
+    _assert_indexed_equals_scan(cat)
